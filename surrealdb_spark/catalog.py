@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,6 +32,53 @@ TABLES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+class ScanCache:
+    """Resolved-scan cache shared by every table reader.
+
+    `spark.read.parquet` re-lists the path and runs a footer
+    schema-inference job on every call — pure catalog-resolution overhead
+    (~0.1 s per table locally) that a real engine's catalog caches
+    (the reference resolves table definitions once from its catalog,
+    core/src/exec/planner/select.rs plan_sources).  Both `Catalog.table`
+    (read-only fixture tables) and `dml.Database.table` (engine-written
+    tables) resolve through the one module-level instance, `SCANS`.
+
+    Each entry is a *slot* (one table location) holding the LAZY
+    DataFrame — schema + file index, never computed rows — together with
+    the *stamp* it was resolved under.  The caller computes the stamp
+    from what is on disk; a lookup whose stamp differs re-resolves and
+    replaces the slot's entry, so one table holds at most one entry.
+    Keyed per-session (weakly — a stopped, dropped session releases its
+    whole sub-cache instead of being pinned for the process lifetime).
+    Bounded: a long-lived service re-pointing at many dirs evicts
+    oldest-first."""
+
+    MAX_ENTRIES = 256
+
+    def __init__(self) -> None:
+        self._sessions: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+            weakref.WeakKeyDictionary()
+        )
+
+    def get(self, spark: SparkSession, slot: str, stamp,
+            load: Callable[[], DataFrame]) -> DataFrame:
+        sub = self._sessions.get(spark)
+        if sub is None:
+            sub = self._sessions[spark] = {}
+        ent = sub.get(slot)
+        if ent is not None and ent[0] == stamp:
+            return ent[1]
+        df = load()
+        sub.pop(slot, None)
+        if len(sub) >= self.MAX_ENTRIES:
+            sub.pop(next(iter(sub)))
+        sub[slot] = (stamp, df)
+        return df
+
+
+SCANS = ScanCache()
 
 
 class Catalog:
@@ -64,69 +112,45 @@ class Catalog:
     def path(self, name: str) -> str:
         return f"{self.sf_dir}/{name}.parquet"
 
-    # Shared resolved-scan cache (r12): `spark.read.parquet` re-lists the
-    # path and re-reads footers on every call — pure catalog-resolution
-    # overhead (~0.1 s/table locally) that a real engine's catalog caches.
-    # Keyed per-session (weakly — a stopped, dropped session releases its
-    # whole sub-cache instead of being pinned for the process lifetime)
-    # then by (path, mtime, size); holds the LAZY DataFrame (schema + file
-    # index), never any computed rows, and only for the read-only fixture
-    # TABLES — engine-written tables go through register().  Bounded: a
-    # long-lived service re-pointing at many sf dirs evicts oldest-first.
-    _scan_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-        weakref.WeakKeyDictionary()
-    )
-    _CACHE_MAX_ENTRIES = 256
-
-    def _session_scans(self) -> dict:
-        sub = Catalog._scan_cache.get(self.spark)
-        if sub is None:
-            sub = Catalog._scan_cache[self.spark] = {}
-        return sub
-
     def table(self, name: str) -> DataFrame:
         """TableScan: full scan of a table; Catalyst prunes columns/rows."""
-        if name not in self._cache and name in TABLES:
-            shared = self._session_scans().get(self._scan_key(name))
-            if shared is not None:
-                self._cache[name] = shared
         if name not in self._cache:
-            if name == "events":
-                # events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects
-                # outright; read the raw int64 nanos and convert (µs precision).
-                try:
-                    self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                except Exception:
-                    pass
-            df = self.spark.read.parquet(self.path(name))
-            if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-                from pyspark.sql import functions as F
-
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            # Normalize any TIMESTAMP_NTZ column (pyspark>=4.1 inference on
-            # tz-naive parquet) to TIMESTAMP — session tz is pinned UTC above,
-            # so the cast is a pure type change, not a wall-clock shift.
-            ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-            if ntz:
-                from pyspark.sql import functions as F
-
-                df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
-            self._cache[name] = df
             if name in TABLES:
-                sub = self._session_scans()
-                if len(sub) >= Catalog._CACHE_MAX_ENTRIES:
-                    sub.pop(next(iter(sub)))
-                sub[self._scan_key(name)] = df
+                path = self.path(name)
+                df = SCANS.get(self.spark, path, self._stamp(path),
+                               lambda: self._read(name))
+            else:
+                df = self._read(name)
+            self._cache[name] = df
         return self._cache[name]
 
-    def _scan_key(self, name: str) -> tuple:
-        """Cache key carrying path mtime/size so a rewritten file (tmp-dir
-        fixtures in tests) never serves a stale file index."""
-        path = self.path(name)
-        return (path, self._stamp(path))
+    def _read(self, name: str) -> DataFrame:
+        if name == "events":
+            # events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects
+            # outright; read the raw int64 nanos and convert (µs precision).
+            try:
+                self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            except Exception:
+                pass
+        df = self.spark.read.parquet(self.path(name))
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            from pyspark.sql import functions as F
+
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        # Normalize any TIMESTAMP_NTZ column (pyspark>=4.1 inference on
+        # tz-naive parquet) to TIMESTAMP — session tz is pinned UTC above,
+        # so the cast is a pure type change, not a wall-clock shift.
+        ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+        if ntz:
+            from pyspark.sql import functions as F
+
+            df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+        return df
 
     @staticmethod
     def _stamp(path: str) -> tuple | None:
+        """Path mtime/size, so a rewritten fixture file (tmp-dir fixtures
+        in tests) never serves a stale file index."""
         try:
             st = os.stat(path)
             return (st.st_mtime_ns, st.st_size)
@@ -173,7 +197,7 @@ class Catalog:
             rg = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
             nbytes = sum(os.path.getsize(f) for f in files)
             ent = (rg, nbytes)
-            if len(Catalog._layout_cache) >= Catalog._CACHE_MAX_ENTRIES:
+            if len(Catalog._layout_cache) >= ScanCache.MAX_ENTRIES:
                 Catalog._layout_cache.pop(next(iter(Catalog._layout_cache)))
             Catalog._layout_cache[key] = ent
         return ent

@@ -118,6 +118,10 @@ class Database:
         self.tables[td.name] = td
         os.makedirs(self._data(td.name), exist_ok=True)
 
+    # written last into every `data_g<N>` by `_overwrite`: a generation
+    # without it is a write that never finished (crash, kill) and is skipped
+    _COMMITTED = "_SUCCESS"
+
     def _data(self, tbl: str) -> str:
         """Current-generation data dir.
 
@@ -127,22 +131,34 @@ class Database:
         self-overwrite, and a reader of generation N stays valid across
         later mutations (MVCC-style; old generations are retained for the
         Database's lifetime — these are short-lived per-connection dirs).
-        The pointer is the highest-numbered dir ON DISK, never in-memory
-        state, so transaction backup/restore (copytree of the db root) and
-        REMOVE TABLE (rmtree) carry it for free."""
+        The pointer is the highest-numbered COMMITTED dir ON DISK (one
+        holding the `_COMMITTED` marker), never in-memory state, so
+        transaction backup/restore (copytree of the db root) and REMOVE
+        TABLE (rmtree) carry it for free, and a half-written generation
+        left by a killed process is never read.  The initial ``data`` dir
+        takes in-place appends (CREATE / INSERT into an unchanged schema).
+
+        The dir plus its parquet files' (name, size, mtime_ns) are the key
+        `table` caches the resolved scan under (`catalog.ScanCache`)."""
         base = f"{self.root}/{tbl}"
+        for n in sorted(self._generations(tbl), reverse=True):
+            gen = f"{base}/data_g{n}"
+            if os.path.exists(f"{gen}/{self._COMMITTED}"):
+                return gen
+        return f"{base}/data"
+
+    def _generations(self, tbl: str) -> list[int]:
         try:
-            gens = [d for d in os.listdir(base) if d.startswith("data_g")]
+            names = os.listdir(f"{self.root}/{tbl}")
         except FileNotFoundError:
-            gens = []
-        if not gens:
-            return f"{base}/data"
-        return f"{base}/{max(gens, key=lambda d: int(d[6:]))}"
+            return []
+        return [int(d[6:]) for d in names
+                if d.startswith("data_g") and d[6:].isdigit()]
 
     def _next_data(self, tbl: str) -> str:
-        cur = self._data(tbl)
-        n = 0 if cur.endswith("/data") else int(cur.rsplit("data_g", 1)[1])
-        return f"{self.root}/{tbl}/data_g{n + 1}"
+        # past every generation dir, committed or not: a crashed write's
+        # leftovers are never reused
+        return f"{self.root}/{tbl}/data_g{max(self._generations(tbl), default=0) + 1}"
 
     def _changes(self, tbl: str) -> str:
         return f"{self.root}/{tbl}/_changes"
@@ -178,14 +194,65 @@ class Database:
         return self.table(tbl)
 
     def table(self, tbl: str) -> DataFrame:
+        """The table's current generation as a lazy DataFrame.
+
+        Returns the SAME DataFrame for as long as the generation is
+        unchanged, so statements that re-read a table skip Spark's file
+        listing and schema resolution; a new generation resolves once,
+        from a footer read on the driver (`_read`).  Cached (via the shared
+        `catalog.SCANS`, one entry per table) under `_data(tbl)` plus the
+        (name, size, mtime_ns) of its parquet files, which is sound
+        because:
+
+        * Spark part-file names carry a per-write UUID, so an in-place
+          append (`_append`) or view rewrite changes the key;
+        * every other rewrite lands in a fresh ``data_g<N>`` dir;
+        * a transaction restore (copytree) keeps names, sizes and mtimes,
+          so an equal key means a frame over byte-identical files at the
+          same paths.
+
+        The entry holds the schema and file index only, never rows."""
+        from surrealdb_spark.catalog import SCANS
+
         path = self._data(tbl)
-        if not any(f.endswith(".parquet") for f in os.listdir(path)):
+        files = self._parquet_files(path)
+        if not files:
             raise MutationError(f"table {tbl} is empty — no schema to read")
-        return self.spark.read.parquet(path)
+        return SCANS.get(self.spark, f"{self.root}/{tbl}", (path, files),
+                         lambda: self._read(path, files[0][0]))
+
+    # Spark writes the frame's schema into every parquet footer it writes;
+    # schema inference would run a Spark job just to read it back.
+    _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+    def _read(self, path: str, first: str) -> DataFrame:
+        """Resolve one generation dir, taking the schema from a footer on
+        the driver.  Any file's footer serves: a generation is written by
+        one job, and in-place appends keep the stored column order
+        (`_append`).  Spark makes a supplied schema nullable exactly as it
+        does an inferred one."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        meta = pq.read_metadata(f"{path}/{first}").metadata or {}
+        reader = self.spark.read
+        if self._SPARK_SCHEMA_KEY in meta:
+            reader = reader.schema(
+                StructType.fromJson(json.loads(meta[self._SPARK_SCHEMA_KEY])))
+        return reader.parquet(path)
+
+    @staticmethod
+    def _parquet_files(path: str) -> tuple:
+        try:
+            with os.scandir(path) as it:
+                return tuple(sorted(
+                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+                    for e in it if e.name.endswith(".parquet")))
+        except FileNotFoundError:
+            return ()
 
     def _exists(self, tbl: str) -> bool:
-        path = self._data(tbl)
-        return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+        return bool(self._parquet_files(self._data(tbl)))
 
     # -- field pipeline (doc/field.rs process_table_fields) ------------------
 
@@ -559,6 +626,9 @@ class Database:
                 merged = cur.unionByName(records, allowMissingColumns=True)
                 self._overwrite(tbl, merged)
                 return
+            # same fields, stored order: every file of the dir then carries
+            # one schema (`_read` takes it from any footer)
+            records = records.select(*cur.columns)
         self._devoid(records).write.mode("append").parquet(self._data(tbl))
 
     def create(self, tbl: str, records: DataFrame) -> DataFrame:
@@ -598,7 +668,11 @@ class Database:
         fresh = records.join(current.select(td.id_col), td.id_col, "left_anti")
         self._check_unique(tbl, fresh)
         if on_duplicate is None:
-            merged = current.unionByName(fresh)
+            # allowMissingColumns: the stored rows and the batch may carry
+            # different field sets — e.g. record literals bring the
+            # `__present` marker a table filled by INSERT … SELECT lacks
+            # (a NULL marker reads as "derive presence from the values")
+            merged = current.unionByName(fresh, allowMissingColumns=True)
             touched = fresh.localCheckpoint(eager=True)
             dup_before = None
         else:
@@ -610,8 +684,10 @@ class Database:
             for k, v in on_duplicate.items():
                 updated = updated.withColumn(k, v)
             untouched = current.join(dup_ids, td.id_col, "left_anti")
-            merged = untouched.unionByName(updated).unionByName(fresh)
-            touched = updated.unionByName(fresh).localCheckpoint(eager=True)
+            merged = untouched.unionByName(updated).unionByName(
+                fresh, allowMissingColumns=True)
+            touched = updated.unionByName(
+                fresh, allowMissingColumns=True).localCheckpoint(eager=True)
             self._check_unique_final(tbl, merged)
         self._overwrite(tbl, merged)
         self._post_write(tbl, "UPDATE", touched, before=dup_before)
@@ -787,6 +863,10 @@ class Database:
         dst = self._next_data(tbl)
         try:
             self._devoid(df).write.mode("overwrite").parquet(dst)
+            # commit point: only now does `_data` see the new generation
+            # (Spark's own _SUCCESS marker is config-dependent, so the
+            # engine writes its own)
+            open(f"{dst}/{self._COMMITTED}", "a").close()
         except BaseException:
             # never leave a half-written dir as the newest generation
             import shutil
@@ -839,9 +919,6 @@ def apply_patch(doc: dict, ops: list[dict]) -> dict:
         else:
             out[key] = op["value"]
     return out
-
-
-_ = json  # retained for DIFF consumers
 
 
 class ViewDef:

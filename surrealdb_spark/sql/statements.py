@@ -5106,7 +5106,8 @@ class StatementRunner:
                 if stmt.mode != "overwrite":
                     raise ValueError(
                         f"The table '{stmt.name}' already exists")
-            self.db.define_table(TableDef(stmt.name))
+            self.db.define_table(TableDef(
+                stmt.name, changefeed=stmt.changefeed is not None))
             self.db.tables[stmt.name].schemafull = stmt.schemafull
             if stmt.ttype == "RELATION":
                 self.db.tables[stmt.name].is_edge = True
@@ -6036,11 +6037,13 @@ class StatementRunner:
                 info_t["comment"] = stmt.comment
             if stmt.changefeed is not None:
                 info_t["changefeed"] = stmt.changefeed
+                td.changefeed = True
             for d in stmt.drops:
                 if d == "COMMENT":
                     info_t["comment"] = None
                 elif d == "CHANGEFEED":
                     info_t["changefeed"] = None
+                    td.changefeed = False
             for v, lvl in stmt.perm_updates.items():
                 info_t.setdefault("perms", {})[v] = lvl
             self.meta["tables"][stmt.name] = _render_table(stmt.name, info_t)
