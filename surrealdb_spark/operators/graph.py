@@ -7,90 +7,41 @@ Reference semantics (surrealdb/surrealdb):
     GraphEdgeScan (core/src/exec/operators/scan/graph.rs:43,64) with
     direction enum Dir::{In,Out,Both} (core/src/expr/dir.rs:18-26);
   - reverse-reference lookup ``<~`` (core/src/exec/operators/scan/reference.rs:48);
-  - bounded recursion ``@{min..max}`` with +collect/+shortest instructions
-    (core/src/exec/operators/recursion.rs:1-44; depth cap IDIOM_RECURSION_LIMIT
-    core/src/cnf/mod.rs:53).
+  - bounded recursion ``@{min..max}`` with +collect/+path/+shortest
+    instructions (core/src/exec/operators/recursion.rs:1-44; depth cap
+    IDIOM_RECURSION_LIMIT core/src/cnf/mod.rs:53).
 
 Spark mapping: an edge table is a DataFrame with string record-id columns
-``in``/``out`` (canonical form ``table:key``); one hop is one equi-join
-(broadcast when the edge table is small); recursion is an iterative BFS
-driver loop — each round joins the frontier against the edge table and
-anti-joins the visited set (cycle handling per recursion.rs:8-15).  At
-scale the edge table is hash-partitioned on the join side's key so
-successive hops reuse the shuffle; frontiers are localCheckpointed every
-few rounds to truncate lineage.
+``in``/``out`` (canonical form ``table:key``); one hop is one equi-join.
+Bounded recursion (``recurse``, ``recurse_paths``) goes through one core,
+``_traverse``, which picks its plan once from the edge count (Pregelix's
+in-memory vs dataflow choice): at or under ``LOCAL_EDGE_MAX_ROWS`` edges
+the whole traversal is one ``mapInPandas`` job over a broadcast adjacency
+dict; above it a driver loop runs one row-per-(start, node) level per
+round, each level localCheckpointed to truncate lineage.  Cycle handling
+follows recursion.rs:8-15: BFS never re-expands a visited node, and a
++path never revisits a node of its own path.
 """
 
 from __future__ import annotations
 
-import os
-import threading
-from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 IN, OUT = "in", "out"
 # Reference default recursion cap (core/src/cnf/mod.rs:53-54).
 RECURSION_LIMIT = 256
-
-# Per-start visited/frontier arrays stay the BFS state representation while
-# the widest row stays under this many nodes; past it the loop falls back to
-# the row-per-(start, node) shape (see recurse()).  ~4M record-id strings is
-# on the order of 100 MB in one row — the practical ceiling before a single
-# array row becomes a spill/skew hazard.
-ARRAY_STATE_MAX_NODES = int(os.environ.get("SPARK_GRAFT_BFS_ARRAY_NODES", "4000000"))
-# Edge tables at or under this row count get an explicit BROADCAST hint in
-# the per-round join: the materialized edge projection is a checkpointed RDD
-# with no size statistics, so the planner would otherwise assume it is huge
-# and sort-merge every round (two Exchanges + Sorts per round).  ~1M two-
-# column record-id rows ≈ 100 MB hash relation.  Above the budget the
-# planner's shuffled choice stands — the right shape once edges outgrow an
-# executor.
-BCAST_EDGE_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_BFS_BCAST_EDGE_ROWS", "1000000"))
 # At or under this many edges the whole bounded traversal runs as ONE job:
 # the 2-column edge projection is collected once, broadcast as an adjacency
-# dict, and each task BFSes its partition's start nodes in-process
+# dict, and each task expands its partition's start nodes in-process
 # (mapInPandas).  A driver-round loop costs ~0.25 s of job/broadcast/plan
 # machinery PER ROUND no matter how small the frontier is; one job costs it
-# once.  Same budget idea as a broadcast join: past it, the distributed
-# per-round loop below is the correct shape.
-LOCAL_EDGE_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_BFS_LOCAL_EDGES", "1000000"))
-
-_AQE_LOCK = threading.Lock()
-_AQE_STATE: dict[int, tuple[int, str, SparkSession]] = {}
-
-
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Disable AQE for the duration of a driver-side iteration loop.
-
-    Under AQE, ``localCheckpoint`` captures ``UnknownPartitioning`` (the
-    adaptive plan's partitioning is undecided at capture time), so every
-    BFS round re-shuffles state that is already hash-partitioned by
-    ``start``.  With AQE off the checkpoint preserves
-    ``hashpartitioning(start, n)`` and each round plans exchange-free —
-    and an exchange-free round has nothing for AQE to adapt anyway.
-    Refcounted per session so concurrent traversals (suite thread pools)
-    nest correctly; restores the caller's setting when the last one exits.
-    """
-    key = id(spark)
-    with _AQE_LOCK:
-        depth, saved, _ = _AQE_STATE.get(key, (0, "", spark))
-        if depth == 0:
-            saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _AQE_STATE[key] = (depth + 1, saved, spark)
-    try:
-        yield
-    finally:
-        with _AQE_LOCK:
-            depth, saved, _ = _AQE_STATE[key]
-            if depth == 1:
-                spark.conf.set("spark.sql.adaptive.enabled", saved)
-                del _AQE_STATE[key]
-            else:
-                _AQE_STATE[key] = (depth - 1, saved, spark)
+# once.  Same budget idea as a broadcast join: past it, the level loop in
+# _traverse is the shape that scales.
+LOCAL_EDGE_MAX_ROWS = 1_000_000
+_NODES = "start string, node string, depth int"
 
 
 def record_id(table: str, key: Column | str) -> Column:
@@ -140,7 +91,6 @@ def graph_hop(
     direction: str = "out",
     edge_filter: Column | None = None,
     start_id: str = "id",
-    broadcast_edges: bool = False,
     broadcast_start: bool = False,
 ) -> DataFrame:
     """One traversal hop: expand each start record id along the edge table.
@@ -162,17 +112,11 @@ def graph_hop(
     if edge_filter is not None:
         edges = edges.filter(edge_filter)
     if direction == "both":
-        return graph_hop(
-            start, edges, "out", None, start_id, broadcast_edges, broadcast_start
-        ).unionByName(
-            graph_hop(
-                start, edges, "in", None, start_id, broadcast_edges, broadcast_start
-            )
+        return graph_hop(start, edges, "out", None, start_id, broadcast_start).unionByName(
+            graph_hop(start, edges, "in", None, start_id, broadcast_start)
         )
     here, there = (IN, OUT) if direction == "out" else (OUT, IN)
     e = edges.select(F.col(here).alias("__here"), F.col(there).alias("nbr"))
-    if broadcast_edges:
-        e = F.broadcast(e)
     if broadcast_start:
         start = F.broadcast(start)
     return start.join(e, start[start_id] == e.__here).drop("__here")
@@ -188,6 +132,76 @@ def reference_lookup(
     return start.join(referrers, referrers[ref_field] == start[start_id], "inner")
 
 
+def _traverse(
+    seed: DataFrame,
+    edges: DataFrame,
+    direction: str,
+    min_depth: int,
+    max_depth: int,
+    schema: str,
+    expand,
+    step,
+    out: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Bounded level-wise traversal, the one core of recurse/recurse_paths.
+
+    ``seed`` is level 0, one row per traversal: (start, node = start, and
+    any per-row state).  Returns ``schema``: (start, node, depth, *out) for
+    every level in [min_depth, max_depth].  The plan is chosen once, from
+    the edge count:
+
+    - local (≤ LOCAL_EDGE_MAX_ROWS): the edge projection is collected once
+      (Arrow) and broadcast as an adjacency dict; ``expand(adj, s)`` yields
+      start ``s``'s output rows (node, depth, ...) in-process, every start
+      in ONE mapInPandas job.
+    - distributed: ``step(frontier, e, seen)`` builds the next level from
+      the current one, the edge projection and every level so far.  Each
+      level is lazily localCheckpointed, and ONE count job per level both
+      materializes it (every partition persisted under the checkpoint) and
+      probes for emptiness.  Levels at depth ≥ min_depth are unioned.
+    """
+    if max_depth > RECURSION_LIMIT:
+        raise ValueError(f"max_depth {max_depth} exceeds IDIOM_RECURSION_LIMIT {RECURSION_LIMIT}")
+    here, there = (IN, OUT) if direction == "out" else (OUT, IN)
+    e = edges.select(F.col(here).alias("__here"), F.col(there).alias("__there"))
+
+    if e.count() <= LOCAL_EDGE_MAX_ROWS:
+        pairs = e.toPandas()
+        adj: dict = {}
+        for h, t in zip(pairs["__here"].values, pairs["__there"].values):
+            adj.setdefault(h, []).append(t)
+        bc = seed.sparkSession.sparkContext.broadcast(adj)
+        names = [c.split()[0] for c in schema.split(",")]
+
+        def run(batches):
+            import pandas as pd
+
+            a = bc.value
+            for b in batches:
+                rows = [(s, *r) for s in b["start"].values for r in expand(a, s)]
+                yield pd.DataFrame.from_records(rows, columns=names).astype(
+                    {"depth": "int32"}
+                )
+
+        return seed.select("start").mapInPandas(run, schema)
+
+    # Materialize the edge projection once: every level's join would
+    # otherwise re-resolve and re-scan the edge source.
+    e = e.localCheckpoint(eager=True)
+    seen = [seed.localCheckpoint(eager=True)]
+    levels: list[DataFrame] = []
+    for depth in range(1, max_depth + 1):
+        nxt = step(seen[-1], e, seen).localCheckpoint(eager=False)
+        if not nxt.count():
+            break
+        if depth >= min_depth:
+            levels.append(nxt.select("start", "node", F.lit(depth).alias("depth"), *out))
+        seen.append(nxt)
+    if not levels:
+        return seed.sparkSession.createDataFrame([], schema)
+    return reduce(DataFrame.unionByName, levels)
+
+
 def recurse(
     start: DataFrame,
     edges: DataFrame,
@@ -198,300 +212,43 @@ def recurse(
 ) -> DataFrame:
     """Bounded-depth traversal ``@{min..max}`` (+collect semantics).
 
-    Returns (start_id, node, depth): every node reachable from each start at
-    its minimum depth in [min_depth, max_depth].  BFS with a per-start
-    visited set (anti-join) — matches the reference's cycle rule of not
-    re-expanding a node already on the path (recursion.rs:8-15; BFS min-depth
-    is the +collect reading).
-
-    Round shape (r13, guide §2.4 "remove shuffles outright"): BFS state is
-    ONE row per live start — (start, __vis array, __fr array) — hash-
-    partitioned by ``start`` once at entry.  Every round is then
-    exchange-free: explode(frontier) → edge join (broadcast when the edge
-    table is small) → groupBy(start) collect_set (partition-local: the
-    input is clustered by start) → co-partitioned join back to state →
-    in-row array_except against the visited array.  ``localCheckpoint``
-    preserves the hash partitioning across rounds with AQE disabled for
-    the loop (see _no_aqe) — the r12 shape paid 3 Exchanges + 2 Sorts per
-    round for the same dedup + visited subtraction.
-
-    Every round's state is eagerly localCheckpointed: each round is
-    referenced by the next round AND the output union — without
-    materialization the lineage re-executes prior rounds 2^depth times
-    (and grows unboundedly at scale).  One materialized state per round is
-    the GraphFrames-style iteration pattern.
-
-    Scale guard: a per-start array row is bounded by that start's
-    reachable set; the round probe watches the widest row and falls back
-    to the row-per-(start, node) shape (distinct + anti-join — the r12
-    form, correct at any width) the moment it exceeds
-    ``ARRAY_STATE_MAX_NODES``.
+    Returns (start, node, depth): every node reachable from each distinct
+    start at its minimum depth in [min_depth, max_depth].  BFS with a
+    per-start visited set — matches the reference's cycle rule of not
+    re-expanding a node already reached (recursion.rs:8-15; BFS min-depth
+    is the +collect reading).  Duplicate start rows traverse once.
     """
-    if max_depth > RECURSION_LIMIT:
-        raise ValueError(f"max_depth {max_depth} exceeds IDIOM_RECURSION_LIMIT {RECURSION_LIMIT}")
-    here, there = (IN, OUT) if direction == "out" else (OUT, IN)
-    e = edges.select(F.col(here).alias("__here"), F.col(there).alias("__there"))
-    spark = start.sparkSession
 
-    # Small-edge fast path: the whole bounded traversal in ONE job.
-    n_edges = e.count()
-    if n_edges <= LOCAL_EDGE_MAX_ROWS:
-        return _recurse_local(spark, start, e, start_id, min_depth, max_depth)
+    def bfs(adj, s):
+        visited, frontier = {s}, [s]
+        for d in range(1, max_depth + 1):
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, ()):
+                    if v not in visited:
+                        visited.add(v)
+                        nxt.append(v)
+            if not nxt:
+                return
+            if d >= min_depth:
+                for v in nxt:
+                    yield v, d
+            frontier = nxt
 
-    steps: list[DataFrame] = []
-    with _no_aqe(spark):
-        # State partition count derived from the input (guide §2): with AQE
-        # off nothing coalesces the loop's partitions, so a constant (cores,
-        # shuffle.partitions) would schedule that many near-empty tasks per
-        # round at small frontiers and under-split huge ones.  One metadata-
-        # cheap count sizes it; the cap keeps very large start sets at a
-        # bounded-fanout partitioning rather than one partition per core.
-        sel = start.select(F.col(start_id).alias("start"))
-        n_starts = sel.count()
-        n_parts = max(
-            1, min(4 * spark.sparkContext.defaultParallelism, -(-n_starts // 65536))
-        )
-        # repartition establishes hashpartitioning(start, n); the follow-up
-        # distinct (= groupBy every column) is satisfied by it, so dedup of
-        # duplicate start rows adds no second exchange.
-        state = (
-            sel.repartition(n_parts, "start")
-            .distinct()
-            .selectExpr("start", "array(start) AS __vis", "array(start) AS __fr")
-            .localCheckpoint(eager=True)
-        )
-        if max_depth >= 3:
-            # Materialize the 2-column edge projection once: every round's
-            # job otherwise re-resolves and re-scans the edge source to
-            # build its broadcast/join side.  MEMORY_AND_DISK blocks — a
-            # bounded copy of exactly the columns the traversal touches,
-            # in exchange for max_depth re-scans.
-            e = e.localCheckpoint(eager=True)
-        # Each round is ONE spark.sql statement over temp views: every
-        # fluent DataFrame method runs eager analysis of its whole plan
-        # (~10-20 ms each, ~10 per round), which dominated the round at
-        # small frontiers (measured ~0.13-0.22 s construction vs ~0.12 s
-        # execution per round at sf0.1).  A single SQL string is one py4j
-        # call and one analysis.  View names are unique per traversal so
-        # concurrent traversals in suite thread pools don't collide.
-        tag = f"{id(start):x}_{threading.get_ident():x}"
-        v_state, v_edges, v_nxt = (
-            f"__bfs_s_{tag}", f"__bfs_e_{tag}", f"__bfs_n_{tag}"
-        )
-        e.createOrReplaceTempView(v_edges)
-        hint = (
-            f"/*+ BROADCAST({v_edges}) */ " if n_edges <= BCAST_EDGE_MAX_ROWS else ""
-        )
-        round_sql = f"""
-            SELECT start, concat(__vis, __new) AS __vis, __new AS __fr
-            FROM (
-              SELECT s.start, s.__vis, array_except(c.__cand, s.__vis) AS __new
-              FROM {v_state} s
-              JOIN (SELECT {hint}start, collect_set(__there) AS __cand
-                    FROM (SELECT start, explode(__fr) AS node FROM {v_state})
-                    JOIN {v_edges} ON node = __here
-                    GROUP BY start) c USING (start)
-            ) WHERE size(__new) > 0
-        """
-        try:
-            depth = 1
-            while depth <= max_depth:
-                state.createOrReplaceTempView(v_state)
-                nxt = spark.sql(round_sql).localCheckpoint(eager=False)
-                nxt.createOrReplaceTempView(v_nxt)
-                # ONE job per round: the probe's aggregation materializes
-                # the lazily-marked checkpoint (every partition is computed
-                # and persisted under it) and returns the emptiness test +
-                # widest visited row (the array-state scale guard) together.
-                probe = spark.sql(
-                    f"SELECT count(1) AS n, max(size(__vis)) AS w FROM {v_nxt}"
-                ).collect()[0]
-                if not probe["n"]:
-                    break
-                if depth >= min_depth:
-                    steps.append(spark.sql(
-                        f"SELECT start, explode(__fr) AS node,"
-                        f" int({depth}) AS depth FROM {v_nxt}"
-                    ))
-                state = nxt
-                depth += 1
-                if probe["w"] > ARRAY_STATE_MAX_NODES and depth <= max_depth:
-                    _recurse_rows(
-                        state.select("start", F.explode("__fr").alias("node")),
-                        state.select("start", F.explode("__vis").alias("node")),
-                        e, steps, depth, min_depth, max_depth,
-                    )
-                    break
-        finally:
-            for v in (v_state, v_edges, v_nxt):
-                spark.catalog.dropTempView(v)
-    if not steps:
-        return start.sparkSession.createDataFrame(
-            [], "start string, node string, depth int"
-        )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
-
-
-def _recurse_local(
-    spark: SparkSession,
-    start: DataFrame,
-    e: DataFrame,
-    start_id: str,
-    min_depth: int,
-    max_depth: int,
-) -> DataFrame:
-    """Bounded traversal as ONE distributed job over the start set.
-
-    The 2-column edge projection fits the LOCAL_EDGE_MAX_ROWS budget, so it
-    is collected once (Arrow), broadcast as an adjacency dict, and each
-    task BFSes its partition's starts in-process — the per-round driver
-    loop's job/broadcast/planning latency (~0.25 s/round regardless of
-    frontier size) is paid once for the whole traversal.  Identical
-    semantics: per-start visited set, min-depth BFS, depths
-    [min_depth, max_depth]."""
-    rows = e.toPandas()
-    adj: dict = {}
-    h = rows["__here"].values
-    t = rows["__there"].values
-    for i in range(len(h)):
-        adj.setdefault(h[i], []).append(t[i])
-    bc = spark.sparkContext.broadcast(adj)
-
-    def bfs(batches):
-        import pandas as pd
-
-        a = bc.value
-        for b in batches:
-            outs: list = []
-            outn: list = []
-            outd: list = []
-            for s in b["start"].values:
-                visited = {s}
-                frontier = [s]
-                for d in range(1, max_depth + 1):
-                    nxt = []
-                    for u in frontier:
-                        for v in a.get(u, ()):
-                            if v not in visited:
-                                visited.add(v)
-                                nxt.append(v)
-                    if not nxt:
-                        break
-                    if d >= min_depth:
-                        outs.extend([s] * len(nxt))
-                        outn.extend(nxt)
-                        outd.extend([d] * len(nxt))
-                    frontier = nxt
-            yield pd.DataFrame(
-                {
-                    "start": pd.Series(outs, dtype=object),
-                    "node": pd.Series(outn, dtype=object),
-                    "depth": pd.Series(outd, dtype="int32"),
-                }
-            )
-
-    return (
-        start.select(F.col(start_id).alias("start"))
-        .distinct()
-        .mapInPandas(bfs, "start string, node string, depth int")
-    )
-
-
-def _recurse_paths_local(
-    spark: SparkSession,
-    start: DataFrame,
-    e: DataFrame,
-    start_id: str,
-    min_depth: int,
-    max_depth: int,
-) -> DataFrame:
-    """+path enumeration as ONE distributed job over the start set (the
-    small-edge analogue of _recurse_local): per start, level-wise expansion
-    of every simple path (a path never revisits its own nodes), emitting
-    (start, node, depth, '->'-joined path) for depths in
-    [min_depth, max_depth]."""
-    rows = e.toPandas()
-    adj: dict = {}
-    h = rows["__here"].values
-    t = rows["__there"].values
-    for i in range(len(h)):
-        adj.setdefault(h[i], []).append(t[i])
-    bc = spark.sparkContext.broadcast(adj)
-
-    def paths(batches):
-        import pandas as pd
-
-        a = bc.value
-        for b in batches:
-            outs: list = []
-            outn: list = []
-            outd: list = []
-            outp: list = []
-            for s in b["start"].values:
-                frontier = [(s, (s,))]
-                for d in range(1, max_depth + 1):
-                    nxt = []
-                    for u, path in frontier:
-                        for v in a.get(u, ()):
-                            if v not in path:
-                                nxt.append((v, path + (v,)))
-                    if not nxt:
-                        break
-                    if d >= min_depth:
-                        for v, path in nxt:
-                            outs.append(s)
-                            outn.append(v)
-                            outd.append(d)
-                            outp.append("->".join(path))
-                    frontier = nxt
-            yield pd.DataFrame(
-                {
-                    "start": pd.Series(outs, dtype=object),
-                    "node": pd.Series(outn, dtype=object),
-                    "depth": pd.Series(outd, dtype="int32"),
-                    "path": pd.Series(outp, dtype=object),
-                }
-            )
-
-    # No start dedup: +path semantics keep one output set per input row
-    # (the distributed rounds below have no distinct either).
-    return start.select(F.col(start_id).alias("start")).mapInPandas(
-        paths, "start string, node string, depth int, path string"
-    )
-
-
-def _recurse_rows(
-    frontier: DataFrame,
-    visited: DataFrame,
-    e: DataFrame,
-    steps: list[DataFrame],
-    first_depth: int,
-    min_depth: int,
-    max_depth: int,
-) -> None:
-    """Row-per-(start, node) BFS rounds — the any-width continuation used
-    when a start's visited array outgrows ARRAY_STATE_MAX_NODES.  Same
-    results as the array rounds: distinct ∘ anti-join ≡ array_except of
-    the collected set."""
-    frontier = frontier.localCheckpoint(eager=True)
-    visited = visited.localCheckpoint(eager=True)
-    for depth in range(first_depth, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier.node == e.__here)
+    def step(frontier, e, seen):
+        # distinct ∘ anti-join against every earlier level ≡ the visited set
+        return (
+            frontier.join(e, F.col("node") == F.col("__here"))
             .select("start", F.col("__there").alias("node"))
             .distinct()
-            .join(visited, ["start", "node"], "left_anti")
-            .localCheckpoint(eager=True)
+            .join(reduce(DataFrame.unionByName, seen), ["start", "node"], "left_anti")
         )
-        if nxt.isEmpty():
-            break
-        if depth >= min_depth:
-            steps.append(nxt.select("start", "node", F.lit(depth).alias("depth")))
-        visited = visited.unionByName(nxt)
-        frontier = nxt
+
+    seed = start.select(F.col(start_id).alias("start")).distinct()
+    return _traverse(
+        seed.select("start", F.col("start").alias("node")),
+        edges, direction, min_depth, max_depth, _NODES, bfs, step,
+    )
 
 
 def shortest_depth(
@@ -505,13 +262,10 @@ def shortest_depth(
     """``@{..max}+shortest=<target>``: length of the shortest path from each
     start to the target node (recursion instruction in recursion.rs).
     Returns (start, depth) for starts that reach the target within max_depth.
+    recurse emits each (start, node) once, at its BFS depth — the shortest.
     """
     reach = recurse(start, edges, 1, max_depth, direction, start_id)
-    return (
-        reach.filter(F.col("node") == target)
-        .groupBy("start")
-        .agg(F.min("depth").alias("depth"))
-    )
+    return reach.filter(F.col("node") == target).select("start", "depth")
 
 
 def recurse_paths(
@@ -527,57 +281,34 @@ def recurse_paths(
     where path is '->'-joined record ids including the start.
 
     Cycle rule: a path never revisits one of its own nodes
-    (recursion.rs:8-15) — checked with array_contains against the path
-    accumulator.  No cross-path visited set: distinct paths to the same
-    node are all kept (that's the +path semantics).  One eager
-    localCheckpoint per round, as in recurse().
+    (recursion.rs:8-15).  No cross-path visited set: distinct paths to the
+    same node are all kept (that's the +path semantics), and every input
+    row — duplicates included — gets its own result set.
     """
-    if max_depth > RECURSION_LIMIT:
-        raise ValueError(f"max_depth {max_depth} exceeds IDIOM_RECURSION_LIMIT {RECURSION_LIMIT}")
-    here, there = (IN, OUT) if direction == "out" else (OUT, IN)
-    e = edges.select(F.col(here).alias("__here"), F.col(there).alias("__there"))
 
-    # Small-edge fast path: whole path enumeration in ONE job (see
-    # _recurse_local — same budget, same rationale).
-    if e.count() <= LOCAL_EDGE_MAX_ROWS:
-        return _recurse_paths_local(
-            start.sparkSession, start, e, start_id, min_depth, max_depth
+    def paths(adj, s):
+        frontier = [(s, (s,))]
+        for d in range(1, max_depth + 1):
+            frontier = [
+                (v, p + (v,)) for u, p in frontier for v in adj.get(u, ()) if v not in p
+            ]
+            if not frontier:
+                return
+            if d >= min_depth:
+                for v, p in frontier:
+                    yield v, d, "->".join(p)
+
+    def step(frontier, e, seen):
+        there = F.col("__there")
+        return (
+            frontier.join(e, F.col("node") == F.col("__here"))
+            .filter(~F.array_contains("__path", there))
+            .select("start", there.alias("node"), F.array_append("__path", there).alias("__path"))
         )
 
-    frontier = start.select(
-        F.col(start_id).alias("start"),
-        F.col(start_id).alias("node"),
-        F.array(F.col(start_id)).alias("__path"),
-    ).localCheckpoint(eager=True)
-    steps: list[DataFrame] = []
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier.node == e.__here)
-            .filter(~F.array_contains(F.col("__path"), F.col("__there")))
-            .select(
-                "start",
-                F.col("__there").alias("node"),
-                F.array_append(F.col("__path"), F.col("__there")).alias("__path"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        if depth >= min_depth:
-            steps.append(
-                nxt.select(
-                    "start",
-                    "node",
-                    F.lit(depth).alias("depth"),
-                    F.array_join(F.col("__path"), "->").alias("path"),
-                )
-            )
-        frontier = nxt
-    if not steps:
-        return start.sparkSession.createDataFrame(
-            [], "start string, node string, depth int, path string"
-        )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionByName(s)
-    return out
+    sid = F.col(start_id)
+    return _traverse(
+        start.select(sid.alias("start"), sid.alias("node"), F.array(sid).alias("__path")),
+        edges, direction, min_depth, max_depth, _NODES + ", path string", paths, step,
+        (F.array_join("__path", "->").alias("path"),),
+    )

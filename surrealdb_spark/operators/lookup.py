@@ -27,11 +27,11 @@ column.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from surrealdb_spark.operators.graph import RECURSION_LIMIT
 
 SEP = "\x01"  # sorts below every printable char → correct (ft, fk) order
 
@@ -860,14 +860,11 @@ def recursive_destructure_trees(spark, cat, start_rids: list, bounds,
 #     (recursion.rs:8-15) and the depth cap 256 (cnf/mod.rs:53).
 
 
-RECURSION_LIMIT = 256
 # Broadcast budget for a recursion's per-step hop projection (3 record-id
-# string columns): same rationale/order as graph.BCAST_EDGE_MAX_ROWS — the
-# checkpointed projection has no stats, so the planner would sort-merge
-# every level without the hint; above the budget its choice stands.
-_BCAST_HOP_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_RECURSE_BCAST_ROWS", "1000000")
-)
+# string columns, ~1M rows ≈ a 100 MB hash relation): the checkpointed
+# projection has no stats, so the planner would sort-merge every level
+# without the hint; above the budget its choice stands.
+_BCAST_HOP_MAX_ROWS = 1_000_000
 
 
 def validate_recursion_bounds(lo, hi) -> None:

@@ -118,11 +118,14 @@ def graph_two_hop_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     start = cat.customer.filter(F.col("c_custkey") % 50 == 0).select(
         record_id("customer", "c_custkey").alias("id")
     )
+    hop1 = graph_hop(start, _placed(cat), "out").select(
+        "id", F.col("nbr").alias("order_id"))
     # broadcast_start: the frontier is the %50-seeded customer set times
     # ~10 orders — known small; the contains edge table is corpus-sized
-    # and its post-projection size estimate is unreliable (see graph_hop)
-    hop1 = graph_hop(start, _placed(cat), "out", broadcast_start=True).select(
-        "id", F.col("nbr").alias("order_id"))
+    # and its post-projection size estimate is unreliable (see graph_hop).
+    # At the 10x layout the planner otherwise broadcasts the contains side
+    # (plans/sf1/graph_two_hop_count_{hint,nohint}.txt); hop1's planner
+    # choice already broadcasts the seeded start set.
     hop2 = graph_hop(hop1, contains, "out", start_id="order_id",
                      broadcast_start=True)
     return hop2.groupBy("id").agg(F.count(F.lit(1)).alias("n_items"))

@@ -222,11 +222,12 @@ def _graph_recursion_oracle() -> str:
 def graph_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """@{min..max} recursion: +collect, +path, +shortest (graph.py BFS).
 
-    The three children are independent driver-side BFS loops (a dozen
-    tiny jobs each); building them from a small thread pool overlaps the
-    loops so each round's stragglers back-fill idle cores (r12, guide
-    §2.6).  Results are unchanged: each child is built exactly as before
-    and the union order is fixed.
+    The three children are independent traversals.  Under the graph.py
+    edge budget each one builds with eager driver jobs (edge count,
+    adjacency collect) and then runs as one mapInPandas job; building them
+    from a small thread pool overlaps those eager jobs (r12, guide §2.6).
+    Results are unchanged: each child is built exactly as before and the
+    union order is fixed.
     """
     from concurrent.futures import ThreadPoolExecutor
 

@@ -1,12 +1,28 @@
-"""Direction variants + range values — paths the suite oracles don't hit."""
+"""Direction variants + range values — paths the suite oracles don't hit.
+
+The recursion tests run on both traversal plans: ``local`` (the one-job
+in-process expansion every fixture-sized graph takes) and ``distributed``
+(the per-level round loop, forced by dropping the edge budget to 0).
+"""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from surrealdb_spark import suite
 from surrealdb_spark.expr.operators import range_contains, range_struct
-from surrealdb_spark.operators.graph import graph_hop, recurse
+from surrealdb_spark.operators import graph
+from surrealdb_spark.operators.graph import graph_hop, recurse, recurse_paths
+from surrealdb_spark.testing import compare_frames, duckdb_run
+
+
+@pytest.fixture(params=["local", "distributed"])
+def plan(request, monkeypatch):
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "LOCAL_EDGE_MAX_ROWS", 0)
+    return request.param
 
 
 def _edges(spark):
@@ -20,19 +36,45 @@ def test_graph_hop_both_directions(spark):
     assert both == {"n:1", "n:3"}  # out to n:3, in from n:1
 
 
-def test_recurse_inbound(spark):
+def test_recurse_inbound(spark, plan):
     start = spark.createDataFrame([Row(id="n:3")])
     got = {(r.node, r.depth) for r in recurse(start, _edges(spark), 1, 3, "in").collect()}
     assert got == {("n:2", 1), ("n:1", 2)}
 
 
-def test_recurse_cycle_terminates(spark):
+def test_recurse_cycle_terminates(spark, plan):
     rows = [Row(**{"in": "c:1", "out": "c:2"}), Row(**{"in": "c:2", "out": "c:1"})]
     edges = spark.createDataFrame(rows)
     start = spark.createDataFrame([Row(id="c:1")])
     got = {(r.node, r.depth) for r in recurse(start, edges, 1, 10).collect()}
     # visited set stops the loop: c:2 at depth 1; c:1 never re-emitted
     assert got == {("c:2", 1)}
+
+
+def test_recurse_paths_cycle_terminates(spark, plan):
+    # a lasso: l:0 -> l:1 -> l:2 -> l:1, a cycle that does not pass the start
+    rows = [Row(**{"in": f"l:{a}", "out": f"l:{b}"}) for a, b in [(0, 1), (1, 2), (2, 1)]]
+    edges = spark.createDataFrame(rows)
+    start = spark.createDataFrame([Row(id="l:0")])
+    got = sorted(tuple(r) for r in recurse_paths(start, edges, 1, 10).collect())
+    # a path never revisits its own nodes: l:0->l:1->l:2->l:1 is cut
+    assert got == [("l:0", "l:1", 1, "l:0->l:1"), ("l:0", "l:2", 2, "l:0->l:1->l:2")]
+
+
+def test_duplicate_starts(spark, plan):
+    start = spark.createDataFrame([Row(id="n:1"), Row(id="n:1")])
+    nodes = sorted(tuple(r) for r in recurse(start, _edges(spark), 1, 2).collect())
+    assert nodes == [("n:1", "n:2", 1), ("n:1", "n:3", 2)]  # starts dedup
+    paths = sorted(tuple(r) for r in recurse_paths(start, _edges(spark), 2, 2).collect())
+    assert paths == [("n:1", "n:3", 2, "n:1->n:2->n:3")] * 2  # one set per row
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_recurse_ancestors", "graph_recurse_paths", "graph_shortest_to_root"]
+)
+def test_recursion_oracles(spark, sf_dir, plan, name):
+    got = suite.all_queries()[name](spark, sf_dir).toPandas()
+    compare_frames(name, got, duckdb_run(suite.all_oracles()[name], sf_dir))
 
 
 def test_range_values(spark):
