@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from surrealdb_spark.values import local_frame
+
 
 @dataclass
 class FieldDef:
@@ -654,6 +656,8 @@ class Database:
         """INSERT — bulk load; ON DUPLICATE KEY UPDATE applies SET exprs to
         clashing ids (expr/data.rs Data::UpdateExpression, Iterable::Mergeable).
         MERGE emulation: existing⟕new anti-join + resolved duplicates + fresh.
+        The write reads the checkpointed batch (``touched``), so the batch's
+        anti-join against the table runs once, not again in the write job.
         """
         td = self.tables[tbl]
         records = self._apply_fields(tbl, records, existing=False)
@@ -672,8 +676,8 @@ class Database:
             # different field sets — e.g. record literals bring the
             # `__present` marker a table filled by INSERT … SELECT lacks
             # (a NULL marker reads as "derive presence from the values")
-            merged = current.unionByName(fresh, allowMissingColumns=True)
             touched = fresh.localCheckpoint(eager=True)
+            merged = current.unionByName(touched, allowMissingColumns=True)
             dup_before = None
         else:
             dup_ids = records.select(td.id_col)
@@ -684,10 +688,9 @@ class Database:
             for k, v in on_duplicate.items():
                 updated = updated.withColumn(k, v)
             untouched = current.join(dup_ids, td.id_col, "left_anti")
-            merged = untouched.unionByName(updated).unionByName(
-                fresh, allowMissingColumns=True)
             touched = updated.unionByName(
                 fresh, allowMissingColumns=True).localCheckpoint(eager=True)
+            merged = untouched.unionByName(touched, allowMissingColumns=True)
             self._check_unique_final(tbl, merged)
         self._overwrite(tbl, merged)
         self._post_write(tbl, "UPDATE", touched, before=dup_before)
@@ -707,7 +710,7 @@ class Database:
         if not self._exists(tbl):
             # UPDATE only touches existing records (update.rs; UPSERT is
             # the create-if-absent verb) — empty table is a no-op
-            empty = self.spark.createDataFrame([], "id string")
+            empty = local_frame(self.spark, [], "id string")
             if capture is not None:
                 capture["before"], capture["after"] = empty, empty
             return empty
@@ -793,7 +796,7 @@ class Database:
         td = self.tables[tbl]
         if not self._exists(tbl):
             # deleting from an empty table is a no-op (doc/delete.rs)
-            empty = self.spark.createDataFrame([], "id string")
+            empty = local_frame(self.spark, [], "id string")
             if capture is not None:
                 capture["before"] = empty
             return empty

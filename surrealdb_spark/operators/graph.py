@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from surrealdb_spark.values import local_frame
+
 IN, OUT = "in", "out"
 # Reference default recursion cap (core/src/cnf/mod.rs:53-54).
 RECURSION_LIMIT = 256
@@ -198,7 +200,7 @@ def _traverse(
             levels.append(nxt.select("start", "node", F.lit(depth).alias("depth"), *out))
         seen.append(nxt)
     if not levels:
-        return seed.sparkSession.createDataFrame([], schema)
+        return local_frame(seed.sparkSession, [], schema)
     return reduce(DataFrame.unionByName, levels)
 
 

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from surrealdb_spark.values import local_frame
+
 OVERFLOW = "_overflow"
 
 _TYPE_MAP = {bool: "boolean", int: "bigint", float: "double", str: "string"}
@@ -73,9 +75,8 @@ def to_spine_df(spark: SparkSession, docs: list[dict], spine: dict[str, str]) ->
         row[OVERFLOW] = json.dumps(rest, sort_keys=True) if rest else None
         rows.append(row)
     schema = ", ".join([f"`{k}` {t}" for k, t in spine.items()] + [f"`{OVERFLOW}` string"])
-    return spark.createDataFrame(
-        [tuple(r.get(k) for k in list(spine) + [OVERFLOW]) for r in rows], schema
-    )
+    cols = list(spine) + [OVERFLOW]
+    return local_frame(spark, [tuple(r.get(k) for k in cols) for r in rows], schema)
 
 
 def dynamic_field(df: DataFrame, name: str, dtype: str = "string") -> F.Column:

@@ -14,6 +14,8 @@ SURVEY §4).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -238,6 +240,7 @@ def _type_cat(simple: str) -> str | None:
     return None
 
 
+from surrealdb_spark.values import local_frame
 from surrealdb_spark.values import merge_union_dt as _union_merge_dt
 
 
@@ -2392,11 +2395,11 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
                             return [_rowify(e) for e in x]
                         return x
 
-                    outs.append(spark.createDataFrame(
-                        [_rowify(x) for x in plain]))
+                    outs.append(local_frame(
+                        spark, [_rowify(x) for x in plain]))
                 else:
-                    outs.append(spark.createDataFrame(
-                        [(x,) for x in plain]).toDF("value"))
+                    outs.append(local_frame(
+                        spark, [(x,) for x in plain]).toDF("value"))
             out = outs[0]
             for o in outs[1:]:
                 out = out.unionByName(o, allowMissingColumns=True)
@@ -2552,6 +2555,31 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
                     fields2[i] = _dc0.replace(fields2[i], expr=e)
             sel = _replace(sel, fields=fields2)
 
+    # record-link (string) and array-of-record-link columns: dereferenced
+    # below; lookup and deref slots only ever add `__`-named columns
+    str_cols = {c for c, t in df.dtypes if t == "string" and c != "id"
+                and not c.startswith("__")}
+    arr_cols = {c for c, t in df.dtypes if t == "array<string>"
+                and not c.startswith("__")}
+
+    # WHERE first: conjuncts that need no lookup or deref slot filter the
+    # source before any slot is attached.  Each attach ends in a left join
+    # on `id`, and Catalyst pushes a filter above it into the outer side
+    # only, so every lookup would otherwise run for all source records
+    # (the reference filters records before computing projections).  KNN
+    # and subquery conjuncts keep their place below.
+    if sel.where is not None:
+        rest, early = _pull_conjuncts(sel.where, lambda n: not (
+            _has_lookup(n) or _has_deref(n, str_cols)
+            or _has_array_deref(n, arr_cols)
+            or _has_node(n, ("subquery", "knn"))))
+        if early:
+            known = {**{c: "void" for c in df.columns}, **types}
+            cond = reduce(lambda a, b: ("bin", "AND", a, b), early)
+            df = df.filter(compile_expr(_null_unknown_idents(cond, known),
+                                        params, types))
+            sel = _replace(sel, where=rest)
+
     # graph lookups anywhere in WHERE / fields / VALUE / ORDER are
     # extracted to hidden join-computed columns first (operators/lookup.py;
     # exec chains GraphEdgeScan per segment — here one equi-join per edge
@@ -2617,8 +2645,6 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
 
     # record-link dereference: `link.field` over string record-id columns
     # → one left join each (value/idiom.rs deref; operators/lookup.py)
-    str_cols = {c for c, t in df.dtypes if t == "string" and c != "id"
-                and not c.startswith("__")}
     if str_cols and (
         (sel.where is not None and _has_deref(sel.where, str_cols))
         or (sel.fields and any(_has_deref(f.expr, str_cols)
@@ -2675,8 +2701,6 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
     # `tags.*.name` over array<string> record-id columns → posexplode +
     # join + ordered re-collect (expr/part.rs Field/Destructure over
     # arrays; operators/lookup.attach_array_deref)
-    arr_cols = {c for c, t in df.dtypes if t == "array<string>"
-                and not c.startswith("__")}
     if arr_cols and (
         (sel.where is not None and _has_array_deref(sel.where, arr_cols))
         or (sel.fields and any(_has_array_deref(f.expr, arr_cols)
@@ -4109,10 +4133,11 @@ def dataclasses_replace_order(k, expr):
     return dataclasses.replace(k, expr=expr)
 
 
-def _split_knn_filters(ast):
-    """Pull `field <|k[,metric]|> vec` conjuncts out of a WHERE tree
-    (top-level ANDs).  Returns (remaining_ast|None, [(k, metric, lhs, rhs)])."""
-    specs: list = []
+def _pull_conjuncts(ast, take):
+    """Split a WHERE tree's top-level AND conjuncts: the ones ``take``
+    accepts, in order, and the rest rebuilt as an AND tree.  Returns
+    (remaining_ast|None, [conjunct])."""
+    taken: list = []
 
     def walk(node):
         if node[0] == "bin" and node[1] in ("AND", "&&"):
@@ -4122,13 +4147,27 @@ def _split_knn_filters(ast):
             if r is None:
                 return l
             return ("bin", "AND", l, r)
-        if node[0] == "knn":
-            _, k, metric, lhs, rhs = node
-            specs.append((k, metric, lhs, rhs))
+        if take(node):
+            taken.append(node)
             return None
         return node
 
-    return walk(ast), specs
+    return walk(ast), taken
+
+
+def _has_node(ast, kinds: tuple) -> bool:
+    """Any node of one of ``kinds`` anywhere in the expression?"""
+    if isinstance(ast, tuple) and ast and ast[0] in kinds:
+        return True
+    return isinstance(ast, (tuple, list)) and any(
+        _has_node(x, kinds) for x in ast if isinstance(x, (tuple, list)))
+
+
+def _split_knn_filters(ast):
+    """Pull `field <|k[,metric]|> vec` conjuncts out of a WHERE tree
+    (top-level ANDs).  Returns (remaining_ast|None, [(k, metric, lhs, rhs)])."""
+    rest, knn = _pull_conjuncts(ast, lambda n: n[0] == "knn")
+    return rest, [n[1:] for n in knn]
 
 
 def _is_recurse_path(expr) -> bool:
@@ -4170,27 +4209,10 @@ def _split_subquery_filters(ast):
     """Pull `x IN (SELECT ...)` / `x NOTINSIDE (SELECT ...)` conjuncts out of
     a WHERE tree (top-level ANDs only).  Returns (remaining_ast|None,
     [(lhs_ast, Select, positive)])."""
-    subs: list = []
-
-    def walk(node):
-        if node[0] == "bin" and node[1] in ("AND", "&&"):
-            l, r = walk(node[2]), walk(node[3])
-            if l is None:
-                return r
-            if r is None:
-                return l
-            return ("bin", "AND", l, r)
-        if (
-            node[0] == "bin"
-            and node[1] in ("IN", "INSIDE", "NOTINSIDE")
-            and node[3][0] == "subquery"
-        ):
-            subs.append((node[2], node[3][1], node[1] != "NOTINSIDE"))
-            return None
-        return node
-
-    rest = walk(ast)
-    return rest, subs
+    rest, subs = _pull_conjuncts(ast, lambda n: (
+        n[0] == "bin" and n[1] in ("IN", "INSIDE", "NOTINSIDE")
+        and n[3][0] == "subquery"))
+    return rest, [(n[2], n[3][1], n[1] != "NOTINSIDE") for n in subs]
 
 
 def _ast_text(ast) -> str | None:

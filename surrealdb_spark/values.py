@@ -27,6 +27,7 @@ Design decisions (SURVEY.md §1.4, written down here once):
 from __future__ import annotations
 
 import datetime as _dt
+import decimal as _dec
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -187,6 +188,66 @@ try:  # createDataFrame type inference looks types up by EXACT class
     _pst._type_mappings[NanoDatetime] = _pst.TimestampType
 except Exception:  # pragma: no cover - internal mapping moved
     pass
+
+
+def local_frame(spark, rows, schema: T.StructType | str | None = None):
+    """A DataFrame over driver-side rows (tuples, dicts or Rows), shipped to
+    the JVM as Arrow batches so the plan reads them as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` instead parallelizes a pickled Python
+    RDD, and every job over the frame re-reads it through Python workers.
+    The schema is ``schema`` (a ``StructType`` or DDL string) or PySpark's
+    own list inference, and values take that schema's ``toInternal``
+    encoding — both exactly what ``createDataFrame(rows[, schema])`` uses:
+    naive datetimes are local time, aware ones shift to UTC, dates become
+    day counts."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _create_converter
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    elif schema is None:
+        schema = infer_schema(spark, rows)
+    to_tuple = _create_converter(schema)
+    cols = list(zip(*(schema.toInternal(to_tuple(r)) for r in rows))) \
+        or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array([_arrow_value(f.dataType, v) for v in col],
+                  type=to_arrow_type(f.dataType))
+         for f, col in zip(schema.fields, cols)],
+        names=schema.names)
+    return spark.createDataFrame(table, schema)
+
+
+def infer_schema(spark, rows: list) -> T.StructType:
+    """The ``StructType`` ``spark.createDataFrame(rows)`` infers."""
+    return spark._inferSchemaFromList(rows)
+
+
+def _arrow_value(dt, v):
+    """An internal (``toInternal``) value in the form ``pyarrow.array``
+    takes for ``dt``: decimals rounded half-up to the type's scale (as the
+    JVM rounds a pickled decimal), maps as key/value pairs."""
+    if v is None:
+        return None
+    if isinstance(dt, T.DecimalType):
+        return v.quantize(_DEC_ONE.scaleb(-dt.scale), _dec.ROUND_HALF_UP,
+                          _DEC_CTX)
+    if isinstance(dt, T.ArrayType):
+        return [_arrow_value(dt.elementType, x) for x in v]
+    if isinstance(dt, T.MapType):
+        return [(_arrow_value(dt.keyType, k), _arrow_value(dt.valueType, x))
+                for k, x in v.items()]
+    if isinstance(dt, T.StructType):
+        return tuple(_arrow_value(f.dataType, x)
+                     for f, x in zip(dt.fields, v))
+    return v
+
+
+_DEC_ONE = _dec.Decimal(1)
+_DEC_CTX = _dec.Context(prec=_dec.MAX_PREC)
 
 
 class ClosureValue:

@@ -7,14 +7,18 @@ in-process expansion every fixture-sized graph takes) and ``distributed``
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from surrealdb_spark import suite
+from surrealdb_spark.dml import Database
 from surrealdb_spark.expr.operators import range_contains, range_struct
 from surrealdb_spark.operators import graph
 from surrealdb_spark.operators.graph import graph_hop, recurse, recurse_paths
+from surrealdb_spark.sql.statements import StatementRunner
 from surrealdb_spark.testing import compare_frames, duckdb_run
 
 
@@ -85,3 +89,24 @@ def test_range_values(spark):
     )
     row = df.first()
     assert (row.excl, row.incl, row.lo) == (False, True, True)
+
+
+def test_lookup_projection_filters_sources_first(spark, tmp_path):
+    """A lookup-free WHERE filters the source before the lookup is
+    attached, so the lookup only expands the matching records."""
+    r = StatementRunner(spark, Database(spark, str(tmp_path)))
+    for i in range(1, 5):
+        r.run(f"CREATE person:{i} SET n = {i}")
+    for a, b in [(1, 2), (2, 3), (2, 4), (3, 1)]:
+        r.run(f"RELATE person:{a}->knows->person:{b}")
+    lookup = "SELECT id, ->knows->person AS k FROM person"
+    df = r.run(lookup + " WHERE n = 2")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # one filter over the outer side, one inside the lookup branch
+    filters = [ln for ln in plan.splitlines()
+               if re.search(r"Filter .*\bn#\d+L? <=> 2\b", ln)]
+    assert len(filters) == 2, plan
+    got = [(row.id, sorted(row.k)) for row in df.collect()]
+    want = [(row.id, sorted(row.k)) for row in r.run(lookup).collect()
+            if row.id == "person:2"]
+    assert got == want == [("person:2", ["person:3", "person:4"])]
