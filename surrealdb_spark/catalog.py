@@ -164,14 +164,12 @@ class Catalog:
     # config.  ``spread(df, table, key)`` inserts a hash repartition across
     # the cores ONLY when the table's own layout caps scan parallelism
     # below the core count AND the table is small enough that the extra
-    # exchange is cheap (<1 GiB default).  At 100 TB inputs have many row
+    # exchange is cheap (< 1 GiB).  At 100 TB inputs have many row
     # groups / exceed the cap → identity, plan unchanged.  Callers use it
     # where map-side work is CPU-heavy per byte (decimal aggregation,
     # hash fingerprinting) — not blanket, because the extra stage taxes
     # cheap scans more than single-threading does.
-    _SPREAD_MAX_BYTES = int(
-        os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES", str(1 << 30))
-    )
+    _SPREAD_MAX_BYTES = 1 << 30
     # Keyed by (path, mtime, size) — same stamp as the scan cache, so a
     # rewritten fixture at the same path never serves a stale layout —
     # and bounded like it.

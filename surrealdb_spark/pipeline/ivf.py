@@ -6,19 +6,23 @@ SRP-LSH (pipeline/similarity.py).  The reference's HNSW
 (core/src/idx/trees/hnsw/) is a sequential in-memory graph; IVF is the
 other classic distributed-friendly shape: partition the corpus by nearest
 centroid (an index-build artifact), then search only ``nprobe`` cells.
+This module only generates candidates: pairs are scored and ranked by the
+one pair scorer, ``operators.knn.top_k``.
 
 100 TB cost shape:
-  * build — ``iters`` passes, each: one broadcast-matmul assignment
-    (pandas UDF, batch×dim @ dim×k) + one groupBy(cell) mean.  Centroid
-    count k is driver-sized (k·dim doubles broadcast per stage).
+  * build — ``iters`` passes, each ONE narrow mapInPandas job that assigns
+    cells (batch×dim @ dim×k matmul) and sums them per task; then one
+    assignment pass materializes ``assigned`` (id, vec, magnitude, cell).
+    Centroid count k is driver-sized (k·dim doubles broadcast per stage).
   * search — queries pick nprobe cells from the broadcast centroid matrix,
     then ONE join keyed on cell id against the cell-partitioned corpus:
     shuffle ∝ |queries|·nprobe + touched cells, never the full corpus.
   * recall/latency dial: nprobe/k (the standard IVF trade-off).
 
 Determinism: centroids init from md5-ordered row sample, Lloyd updates are
-mean-of-cell (decimal-free but order-stable enough for tests: assignment
-is argmin over exact doubles; ties broken by lowest cell id).
+mean-of-cell (decimal-free but order-stable enough for tests); every
+nearest-cell choice (assignment and probes) ranks exact doubles in one
+helper, ``_nearest_cells``, ties broken by lowest cell id.
 """
 
 from __future__ import annotations
@@ -26,29 +30,42 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # noqa: F401 — pandas_udf string type hints resolve lazily
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from surrealdb_spark.functions import vector as V
+from surrealdb_spark.operators.knn import side, top_k, with_magnitude
 
 
-def _assign_udf(centroids: np.ndarray):
-    """argmin_{cell} ||v - c||² as one batch matmul: the closure captures
-    the k×dim centroid matrix (broadcast once per stage)."""
+def _nearest_cells(centroids: np.ndarray):
+    """→ ``nearest(M, n)``: the n nearest cells to each row of M
+    (batch × dim), nearest first, ties to the lowest cell id.
+    ‖v−c‖² = ‖v‖² − 2·v·c + ‖c‖², and ‖v‖² is constant per row, so rank
+    ‖c‖² − 2·v·c as one batch matmul.  A closure, so the kernels that call
+    it pickle by value and workers need not import this package."""
     C = centroids.astype(np.float64)            # k × dim
     Cn = (C * C).sum(axis=1)                    # ‖c‖² per cell
 
-    @F.pandas_udf(T.IntegerType())
-    def assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        M = np.vstack(v.to_numpy())             # batch × dim
-        # ‖v−c‖² = ‖v‖² − 2·v·c + ‖c‖²; ‖v‖² is constant per row → drop
+    def nearest(M: np.ndarray, n: int) -> np.ndarray:
         d = Cn[None, :] - 2.0 * (M @ C.T)       # batch × k
-        return pd.Series(np.argmin(d, axis=1), dtype="int32")
+        return np.argsort(d, axis=1, kind="stable")[:, :n]
 
-    return assign
+    return nearest
+
+
+def _cells_udf(centroids: np.ndarray, n: int):
+    """array<int> of the n nearest cells per vector; the closure captures
+    the k×dim centroid matrix (broadcast once per stage)."""
+    nearest = _nearest_cells(centroids)
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def cells(v: pd.Series) -> pd.Series:
+        if len(v) == 0:
+            return pd.Series([], dtype="object")
+        idx = nearest(np.vstack(v.to_numpy()), n)
+        return pd.Series([row.astype("int32").tolist() for row in idx],
+                         dtype="object")
+
+    return cells
 
 
 class IvfIndex:
@@ -56,7 +73,7 @@ class IvfIndex:
 
     def __init__(self, assigned: DataFrame, centroids: np.ndarray,
                  id_col: str, vec_col: str):
-        self.assigned = assigned        # (id, vec, __cell)
+        self.assigned = assigned        # (id, vec, MAG, __cell)
         self.centroids = centroids      # k × dim
         self.id_col = id_col
         self.vec_col = vec_col
@@ -66,64 +83,19 @@ class IvfIndex:
                exclude_self: bool = False) -> DataFrame:
         """Top-k per query over the nprobe nearest cells →
         (q_id, c_id, dist, rank)."""
-        C = self.centroids
-        n_cells = C.shape[0]
-        nprobe = min(nprobe, n_cells)
-        Cn = (C * C).sum(axis=1)
-
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def probe_cells(v: pd.Series) -> pd.Series:
-            if len(v) == 0:
-                return pd.Series([], dtype="object")
-            M = np.vstack(v.to_numpy())
-            d = Cn[None, :] - 2.0 * (M @ C.T)
-            idx = np.argsort(d, axis=1)[:, :nprobe]
-            return pd.Series([row.astype("int32").tolist() for row in idx],
-                             dtype="object")
-
+        nprobe = min(nprobe, self.centroids.shape[0])
         if query_pred is not None:
-            q = self.assigned.filter(query_pred).select(
-                F.col(self.id_col).alias("q_id"),
-                F.col(self.vec_col).alias("__qv"),
-            )
+            q = self.assigned.filter(query_pred)
         else:
             assert queries is not None, "pass queries or query_pred"
-            q = queries.select(F.col(self.id_col).alias("q_id"),
-                               F.col(self.vec_col).alias("__qv"))
-        q = q.withColumn("__cell", F.explode(probe_cells("__qv")))
-        # Magnitude hoist for cosine (r13, same split as operators/knn.py):
-        # |q| and |c| are per-row constants, so the O(candidates) stage
-        # evaluates ONE fold per pair instead of three — and the rewritten
-        # 1.0 − dot/(|q|·|c|) hits V.cosine_distance's exact rounding
-        # points (bit-identical dist, same ordering).
-        corp = self.assigned.select(
-            F.col(self.id_col).alias("c_id"),
-            F.col(self.vec_col).alias("__cv"), "__cell",
-        )
-        if metric == "cosine":
-            q = q.withColumn("__qm", V.magnitude("__qv"))
-            corp = corp.withColumn("__cm", V.magnitude("__cv"))
-            pair_dist = F.lit(1.0) - V.dot("__qv", "__cv") / (
-                F.col("__qm") * F.col("__cm")
-            )
-        else:
-            pair_dist = V.METRICS[metric]("__qv", "__cv")
+            q = with_magnitude(queries, self.vec_col)
+        q = side(q, "q", self.id_col, self.vec_col).withColumn(
+            "__cell", F.explode(_cells_udf(self.centroids, nprobe)("__qv")))
+        corp = side(self.assigned, "c", self.id_col, self.vec_col, "__cell")
         # few queries × nprobe cells vs the big cell-partitioned corpus:
         # broadcast the query side, join keyed on cell id only
-        cand = F.broadcast(q).join(corp, "__cell")
-        if exclude_self:
-            cand = cand.filter(F.col("q_id") != F.col("c_id"))
-        scored = cand.select("q_id", "c_id", pair_dist.alias("dist"))
-        # Single window + rank filter: Spark's WindowGroupLimit rewrite
-        # runs the partial top-k per map partition BEFORE the exchange (the
-        # same r12 simplification as operators/knn.py — one Exchange + one
-        # Window instead of the hand-rolled salted local top-k's two).
-        order = [F.col("dist").asc(), F.col("c_id").asc()]
-        top = W.partitionBy("q_id").orderBy(*order)
-        return (
-            scored.withColumn("rank", F.row_number().over(top))
-            .filter(F.col("rank") <= k)
-        )
+        return top_k(F.broadcast(q).join(corp, "__cell"), k, metric,
+                     exclude_self)
 
 
 def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
@@ -157,23 +129,21 @@ def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
         # Partial sums accumulate in row order within each partition (the
         # same order Spark's partial aggregation consumed them) and combine
         # on the driver in partition order — deterministic.
-        C = centroids.astype(np.float64)
-        Cn = (C * C).sum(axis=1)
-
-        def partials(batches, _C=C, _Cn=Cn, _k=n_cells_eff, _vc=vec_col):
+        def partials(batches, _near=_nearest_cells(centroids),
+                     _shape=centroids.shape, _vc=vec_col):
             import pandas as pd
 
-            S = np.zeros_like(_C)
-            n = np.zeros(_k, dtype=np.int64)
+            S = np.zeros(_shape)
+            n = np.zeros(_shape[0], dtype=np.int64)
             for b in batches:
                 if not len(b):
                     continue
                 M = np.vstack(b[_vc].to_numpy()).astype(np.float64)
-                cell = np.argmin(_Cn[None, :] - 2.0 * (M @ _C.T), axis=1)
+                cell = _near(M, 1)[:, 0]
                 np.add.at(S, cell, M)
                 np.add.at(n, cell, 1)
             yield pd.DataFrame(
-                {"cell": np.arange(_k, dtype="int32"),
+                {"cell": np.arange(_shape[0], dtype="int32"),
                  "s": list(S), "n": n}
             )
 
@@ -183,7 +153,7 @@ def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
             .collect()
         )
         fresh = centroids.copy()
-        acc = np.zeros_like(C)
+        acc = np.zeros_like(centroids)
         cnt = np.zeros(n_cells_eff, dtype=np.int64)
         for r in parts:
             acc[r["cell"]] += np.asarray(r["s"])
@@ -193,7 +163,7 @@ def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
                 fresh[cell] = acc[cell] / cnt[cell]
         centroids = fresh
 
-    assigned = base.withColumn(
-        "__cell", _assign_udf(centroids)(vec_col)
+    assigned = with_magnitude(base, vec_col).withColumn(
+        "__cell", _cells_udf(centroids, 1)(vec_col)[0]
     ).localCheckpoint(eager=True)
     return IvfIndex(assigned, centroids, id_col, vec_col)

@@ -1,12 +1,15 @@
 """Similarity search over embedding columns.
 
-Two tiers (SURVEY.md §7 step 10):
-  * ``cosine_topk`` — exact brute-force top-k (operators/knn.knn_join):
-    correct baseline, O(|Q|·|C|) scoring.
-  * ``srp_lsh_topk`` — approximate: sign-random-projection (SimHash-for-
-    cosine) signatures, banded bucketing, exact re-score inside candidate
-    buckets.  At 100 TB the bucket join replaces the full cross product:
-    shuffle is |rows|·bands keyed by (band, bits), and each bucket is tiny.
+Two operations (SURVEY.md §7 step 10):
+  * ``cosine_pairs`` — every pair above a cosine threshold: an O(N²)
+    verify primitive, scored by its own Arrow kernel (an all-pairs
+    threshold, not a top-k), which replays the SQL fold bit for bit.
+  * ``srp_lsh_topk`` — approximate top-k: sign-random-projection
+    (SimHash-for-cosine) signatures and banded bucketing generate the
+    candidate pairs; the one pair scorer, ``operators.knn.top_k``, scores
+    and ranks them exactly.  At 100 TB the bucket join replaces the full
+    cross product: shuffle is |rows|·bands keyed by (band, bits), and each
+    bucket is tiny.  Exact brute force is ``operators.knn.knn_join``.
 
 Plane matrix is derived from md5 — deterministic across runs/engines, no
 RNG state.  The reference's HNSW (core/src/idx/trees/hnsw/) is an in-memory
@@ -22,26 +25,9 @@ import numpy as np
 import pandas as pd  # noqa: F401 — pandas_udf string type hints resolve lazily
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from surrealdb_spark.functions import vector as V
-from surrealdb_spark.operators.knn import knn_join
-
-
-def cosine_topk(
-    queries: DataFrame, corpus: DataFrame, k: int, exclude_self: bool = False
-) -> DataFrame:
-    """Exact brute-force cosine top-k (the correctness baseline)."""
-    return knn_join(
-        queries,
-        corpus,
-        k,
-        metric="cosine",
-        q_id="vec_id",
-        q_vec="embedding",
-        c_id="vec_id",
-        c_vec="embedding",
-        exclude_self=exclude_self,
-    )
+from surrealdb_spark.operators.knn import side, top_k, with_magnitude
 
 
 def cosine_pairs(
@@ -60,6 +46,14 @@ def cosine_pairs(
             "allow_quadratic=True for small verify scopes, or use "
             "srp_lsh_topk for the scale path"
         )
+    id_type = emb.schema[id_col].dataType
+    if not isinstance(id_type, (T.StringType, T.IntegralType)):
+        # the kernel orders each pair (id1 < id2) by numpy comparison,
+        # which matches Spark's order only for strings and integers
+        raise TypeError(
+            f"cosine_pairs needs a string or integral id column, "
+            f"got {id_type.simpleString()} for {id_col!r}"
+        )
     # r13: ONE Arrow pass instead of a broadcast nested-loop join of
     # element-at-a-time folds (guide §4.4 — vectorize heavy numeric work
     # in Arrow batches).  The corpus is collected once and broadcast as a
@@ -72,53 +66,57 @@ def cosine_pairs(
     # sim = dot/(|a|·|b|) with the same rounding points — so sims are
     # bit-identical to the old expression (full-output-diff verified).
     # sf1 (20k × 20k × 64 dims): ~94 s → ~4 s.
-    spark = emb.sparkSession
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.asarray([r[0] for r in rows])
-    mat = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-    dim = mat.shape[1] if len(rows) else 0
-    nrm = np.zeros(len(rows))
-    for d in range(dim):
-        nrm += mat[:, d] * mat[:, d]
-    nrm = np.sqrt(nrm)
-    bc = spark.sparkContext.broadcast((ids, mat, nrm))
-    id_t = emb.schema[id_col].dataType.simpleString()
+    # The fold's sim is NULL for a null vector or a pair of different
+    # lengths (zip_with pads with nulls), so no row: null vectors are
+    # dropped and each length only meets its own length.
+    def by_length(ids, vecs) -> dict:
+        """{length: (ids, matrix, norms)}, norms folded like the SQL fold."""
+        rows: dict[int, list[int]] = {}
+        for r, v in enumerate(vecs):
+            rows.setdefault(len(v), []).append(r)
+        out = {}
+        for dim, sel in rows.items():
+            mat = np.asarray([vecs[r] for r in sel], dtype=np.float64)
+            mat = mat.reshape(len(sel), dim)
+            nrm = np.zeros(len(sel))
+            for d in range(dim):
+                nrm += mat[:, d] * mat[:, d]
+            out[dim] = (np.asarray(ids)[sel], mat, np.sqrt(nrm))
+        return out
+
+    emb = emb.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
+    rows = emb.collect()
+    bc = emb.sparkSession.sparkContext.broadcast(
+        by_length([r[0] for r in rows], [r[1] for r in rows]))
 
     def score(batches):
-        ids2, m2, n2 = bc.value
-        ncorp = len(ids2)
         row_tile, col_tile = 512, 2048
         for b in batches:
-            if not len(b) or not ncorp:
-                continue
-            a_full = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in b[vec_col]],
-                dtype=np.float64,
-            )
-            aid_full = b[id_col].to_numpy()
             out1, out2, outs = [], [], []
-            for r0 in range(0, len(a_full), row_tile):
-                a = a_full[r0:r0 + row_tile]
-                aid = aid_full[r0:r0 + row_tile]
-                na = np.zeros(len(a))
-                for d in range(dim):
-                    na += a[:, d] * a[:, d]
-                na = np.sqrt(na)
-                for c0 in range(0, ncorp, col_tile):
-                    mb = m2[c0:c0 + col_tile]
-                    acc = np.zeros((len(a), len(mb)))
-                    for d in range(dim):
-                        acc += a[:, d, None] * mb[None, :, d]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sim = acc / (na[:, None] * n2[c0:c0 + col_tile][None, :])
-                    mask = (sim > threshold) & (
-                        aid[:, None] < ids2[c0:c0 + col_tile][None, :]
-                    )
-                    i, j = np.nonzero(mask)
-                    if len(i):
-                        out1.append(aid[i])
-                        out2.append(ids2[c0 + j])
-                        outs.append(sim[i, j])
+            for dim, (aid_full, a_full, na_full) in by_length(
+                    b[id_col].to_numpy(), list(b[vec_col])).items():
+                if dim not in bc.value:
+                    continue
+                ids2, m2, n2 = bc.value[dim]
+                for r0 in range(0, len(a_full), row_tile):
+                    a = a_full[r0:r0 + row_tile]
+                    aid = aid_full[r0:r0 + row_tile]
+                    na = na_full[r0:r0 + row_tile]
+                    for c0 in range(0, len(ids2), col_tile):
+                        mb = m2[c0:c0 + col_tile]
+                        acc = np.zeros((len(a), len(mb)))
+                        for d in range(dim):
+                            acc += a[:, d, None] * mb[None, :, d]
+                        with np.errstate(divide="ignore", invalid="ignore"):
+                            sim = acc / (na[:, None] * n2[c0:c0 + col_tile][None, :])
+                        mask = (sim > threshold) & (
+                            aid[:, None] < ids2[c0:c0 + col_tile][None, :]
+                        )
+                        i, j = np.nonzero(mask)
+                        if len(i):
+                            out1.append(aid[i])
+                            out2.append(ids2[c0 + j])
+                            outs.append(sim[i, j])
             if out1:
                 yield pd.DataFrame(
                     {
@@ -128,9 +126,8 @@ def cosine_pairs(
                     }
                 )
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        score, f"id1 {id_t}, id2 {id_t}, sim double"
-    )
+    id_t = id_type.simpleString()
+    return emb.mapInPandas(score, f"id1 {id_t}, id2 {id_t}, sim double")
 
 
 def srp_planes(n_planes: int, dim: int) -> list[list[float]]:
@@ -175,8 +172,6 @@ def srp_signature(vec_col: str, planes: list[list[float]]) -> F.Column:
     The plane matrix rides into the closure (broadcast once per stage);
     the plan carries zero plane literals.
     """
-    from pyspark.sql import types as T
-
     P = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
 
     @F.pandas_udf(T.StringType())
@@ -195,12 +190,13 @@ def srp_signature(vec_col: str, planes: list[list[float]]) -> F.Column:
 
 def srp_sign(corpus: DataFrame, planes: list[list[float]],
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Index-build step: (id, vec, signature), MATERIALIZED.
+    """Index-build step: (vec_id, embedding, __sig, knn.MAG), MATERIALIZED.
 
     Signing is the expensive pass (one fold per plane per row + a large
     literal in the plan); at 100 TB this is a written column — here an
     eager localCheckpoint so one signing feeds both join sides and repeated
-    searches (mirrors FulltextIndex's build-once contract)."""
+    searches (mirrors FulltextIndex's build-once contract).  The stored
+    magnitude lets every search score a candidate pair with one fold."""
     sig = srp_signature(vec_col, planes)
     spark = corpus.sparkSession
     # Signing is CPU-bound (interpreted fold per plane); a narrow parquet
@@ -208,28 +204,21 @@ def srp_sign(corpus: DataFrame, planes: list[list[float]],
     par = spark.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < par:
         corpus = corpus.repartition(par)
-    return corpus.select(
+    return with_magnitude(corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"),
         sig.alias("__sig"),
-    ).localCheckpoint(eager=True)
+    ), "embedding").localCheckpoint(eager=True)
 
 
-def _banded(
-    df: DataFrame, id_alias: str, vec_alias: str, sig_alias: str, bands: int, rows: int
-) -> DataFrame:
-    # Built as one selectExpr (single py4j/parse round trip — query-build
-    # time was dominated by per-Column API chatter, r12; same plan).
+def _banded(df: DataFrame, sig: str, bands: int, rows: int) -> DataFrame:
+    """``df`` with one row per band: (band, bits = the band's signature
+    slice).  One selectExpr (a single py4j/parse round trip — query-build
+    time was dominated by per-Column API chatter, r12)."""
     structs = ", ".join(
-        f"struct({b} AS band, substring(__sig, {b * rows + 1}, {rows}) AS bits)"
+        f"struct({b} AS band, substring({sig}, {b * rows + 1}, {rows}) AS bits)"
         for b in range(bands)
     )
-    return df.selectExpr(
-        f"vec_id AS {id_alias}",
-        f"embedding AS {vec_alias}",
-        f"__sig AS {sig_alias}",
-        f"explode(array({structs})) AS __b",
-    ).selectExpr(id_alias, vec_alias, sig_alias, "__b.band AS band",
-                 "__b.bits AS bits")
+    return df.selectExpr("*", f"inline(array({structs}))")
 
 
 def srp_lsh_topk(
@@ -244,7 +233,8 @@ def srp_lsh_topk(
     signed: DataFrame | None = None,
     broadcast_queries: bool = False,
 ) -> DataFrame:
-    """Approximate cosine top-k: banded SRP-LSH candidates + exact re-score.
+    """Approximate cosine top-k: banded SRP-LSH candidates, scored and
+    ranked exactly by ``operators.knn.top_k``.
 
     A pair is a candidate if ANY band (n_planes//bands consecutive signature
     bits) matches — the classic banding trade-off: more bands = higher
@@ -257,7 +247,9 @@ def srp_lsh_topk(
     so the query side reuses the same signed frame; and pair dedup is a
     FILTER, not a shuffle — both sides carry their full signature, so a
     pair that matches in several bands is kept only at its first matching
-    band (``band == array_position(matches, 1) - 1``).  Shuffles: the
+    band (``band == array_position(matches, 1) - 1``).  Both sides carry
+    the magnitude stored by ``srp_sign``, so the cosine re-score is one
+    fold per pair.  Shuffles: the
     bucket join plus one (q_id)-partitioned window — nothing in between,
     and only (q_id, c_id, dist) crosses the window exchange.
     """
@@ -270,27 +262,20 @@ def srp_lsh_topk(
     else:
         assert queries is not None, "pass queries or query_pred"
         q_signed = srp_sign(queries, planes)
-    q = _banded(q_signed, "q_id", "__qv", "__qsig", bands, rows)
-    c = _banded(signed, "c_id", "__cv", "__csig", bands, rows)
+    q = _banded(side(q_signed, "q", "vec_id", "embedding",
+                     F.col("__sig").alias("__qsig")), "__qsig", bands, rows)
+    c = _banded(side(signed, "c", "vec_id", "embedding",
+                     F.col("__sig").alias("__csig")), "__csig", bands, rows)
     if broadcast_queries:
         # point-lookup shape (few queries vs a huge corpus): ship the query
         # bands to every executor instead of shuffling the corpus
         q = F.broadcast(q)
-    cand = q.join(c, ["band", "bits"])
-    if exclude_self:
-        cand = cand.filter(F.col("q_id") != F.col("c_id"))
     band_match = ", ".join(
         f"CAST(substring(__qsig, {b * rows + 1}, {rows}) = "
         f"substring(__csig, {b * rows + 1}, {rows}) AS INT)"
         for b in range(bands)
     )
-    cand = cand.filter(
+    cand = q.join(c, ["band", "bits"]).filter(
         F.expr(f"band = array_position(array({band_match}), 1) - 1")
     )
-    scored = cand.select(
-        "q_id", "c_id", V.cosine_distance("__qv", "__cv").alias("dist")
-    )
-    from pyspark.sql import Window as W
-
-    top = W.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("c_id").asc())
-    return scored.withColumn("rank", F.row_number().over(top)).filter(F.col("rank") <= k)
+    return top_k(cand, k, "cosine", exclude_self)

@@ -70,13 +70,9 @@ def get_spark(
         # Let the planner pick shuffled-hash over sort-merge when a side's
         # per-partition build fits (guide §3.1/§9): skips both sorts; AQE
         # skew-split still applies.  Sort-merge remains the fallback for
-        # oversized builds via the size conditions.  Env-parameterised so
-        # the strategy can be A/B'd at larger scale without a code edit
-        # (r13: verified at the 10x-scaled layout, see OPTIMIZATION_r13.md).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # oversized builds via the size conditions (r13: verified at the
+        # 10x-scaled layout, see OPTIMIZATION_r13.md).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

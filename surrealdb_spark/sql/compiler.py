@@ -2839,18 +2839,15 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
                         mname = mm
                         use_f32 = hv.get((tb0, f0), "F32") != "F64"
                         break
-        if use_f32:
-            dist = {
-                "cosine": V.cosine_distance_f32,
-                "manhattan": V.manhattan_f32,
-                "chebyshev": V.chebyshev,
-            }.get(mname, V.euclidean_f32)(lhs, rhs)
-        else:
-            dist = {
-                "cosine": lambda a, b: 1 - V.cosine_similarity(a, b),
-                "manhattan": V.manhattan,
-                "chebyshev": V.chebyshev,
-            }.get(mname, V.euclidean)(lhs, rhs)
+        f32 = {
+            "cosine": V.cosine_distance_f32,
+            "euclidean": V.euclidean_f32,
+            "manhattan": V.manhattan_f32,
+        } if use_f32 else {}
+        dist_fn = f32.get(mname) or V.METRICS.get(mname)
+        if dist_fn is None:
+            raise ValueError(f"unsupported KNN distance: {mname.upper()}")
+        dist = dist_fn(lhs, rhs)
         # keep the computed distance as `_distance` so
         # vector::distance::knn() (fnc/vector.rs knn) can reference it;
         # dropped again unless the query mentions the function

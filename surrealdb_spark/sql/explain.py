@@ -2188,7 +2188,7 @@ def plan_value(runner, text: str, params=None, analyze: bool = False):
         stmts = 0
         body = _re.search(r"\{(.*)\}", txt, _re.S)
         if body:
-            from surrealdb_spark.golden import split_statements
+            from surrealdb_spark.sql.parser import split_statements
 
             stmts = len([x for x in split_statements(body.group(1))
                          if x.strip()])

@@ -1781,3 +1781,137 @@ def _parse_select_body(p: Parser) -> Select:
 def _src_name(p: Parser) -> str:
     t = p.next()
     return t.orig or t.text
+
+
+# -- statement splitting ------------------------------------------------------
+
+
+def _strip_comments(src: str) -> str:
+    """Remove `--`/`//`/`#` line comments and `/* */` blocks, respecting
+    strings (surql comment syntax: syn lexer in the reference parser)."""
+    out: list[str] = []
+    i, n = 0, len(src)
+    while i < n:
+        ch = src[i]
+        if ch in "'\"":
+            q = ch
+            out.append(ch)
+            i += 1
+            while i < n:
+                out.append(src[i])
+                if src[i] == "\\" and i + 1 < n:
+                    out.append(src[i + 1])
+                    i += 2
+                    continue
+                if src[i] == q:
+                    i += 1
+                    break
+                i += 1
+            continue
+        if src.startswith("/*", i):
+            j = src.find("*/", i + 2)
+            i = n if j < 0 else j + 2
+            continue
+        if src.startswith("--", i) or src.startswith("//", i) or ch == "#":
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+            continue
+        out.append(ch)
+        i += 1
+    return "".join(out)
+
+
+def split_statements(src: str, lenient_keywords: bool = False) -> list[str]:
+    """Top-level `;` split, respecting strings, bracket nesting, and the
+    worded IF block form.
+
+    `IF cond THEN body; ELSE IF cond THEN body; ELSE body; END` is ONE
+    statement whose branch bodies may each end with an optional `;`
+    (syn/parser/stmt/if.rs parse_worded_tail: a single END closes the
+    whole ELSE-IF chain; the bracketed form `IF cond { .. }` has no END
+    and its braces nest normally).  `IF [NOT] EXISTS` inside DEFINE/
+    REMOVE/ALTER is not a block opener.
+    """
+    src = _strip_comments(src)
+    out: list[str] = []
+    cur: list[str] = []
+    depth = 0
+    # worded-IF tracking at bracket depth 0: each entry is "cond" (seen
+    # IF, awaiting THEN or '{') or "worded" (THEN seen — needs END)
+    ifstack: list[str] = []
+    prev_word = ""
+    i, n = 0, len(src)
+
+    def _next_word(j: int) -> str:
+        while j < n and src[j].isspace():
+            j += 1
+        k = j
+        while k < n and (src[k].isalnum() or src[k] == "_"):
+            k += 1
+        return src[j:k].upper()
+
+    while i < n:
+        ch = src[i]
+        if ch in "'\"":
+            q = ch
+            cur.append(ch)
+            i += 1
+            while i < n:
+                cur.append(src[i])
+                if src[i] == "\\" and i + 1 < n:
+                    cur.append(src[i + 1])
+                    i += 2
+                    continue
+                if src[i] == q:
+                    i += 1
+                    break
+                i += 1
+            continue
+        if ch.isalpha() or ch == "_":
+            j = i
+            while j < n and (src[j].isalnum() or src[j] == "_"):
+                j += 1
+            word = src[i:j].upper()
+            if (lenient_keywords and depth == 0 and not ifstack
+                    and word in ("CREATE", "UPDATE", "UPSERT", "DELETE",
+                                 "INSERT", "RELATE", "DEFINE", "REMOVE",
+                                 "LET", "RETURN", "FOR", "THROW")
+                    and "".join(cur).rstrip().endswith("}")):
+                # block bodies may omit the `;` after a `}`-terminated
+                # statement (fetch/objects.surql setup block runs in the
+                # reference without one) — a following statement keyword
+                # is an implicit boundary
+                stmt0 = "".join(cur).strip()
+                if stmt0:
+                    out.append(stmt0)
+                cur = []
+            if depth == 0:
+                if word == "IF" and prev_word != "ELSE" \
+                        and _next_word(j) not in ("NOT", "EXISTS"):
+                    ifstack.append("cond")
+                elif word == "THEN" and ifstack and ifstack[-1] == "cond":
+                    ifstack[-1] = "worded"
+                elif word == "END" and ifstack and ifstack[-1] == "worded":
+                    ifstack.pop()
+            prev_word = word
+            cur.append(src[i:j])
+            i = j
+            continue
+        if ch in "([{":
+            if ch == "{" and depth == 0 and ifstack and ifstack[-1] == "cond":
+                ifstack.pop()  # bracketed form: braces nest, no END
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        if ch == ";" and depth == 0 and not ifstack:
+            stmt = "".join(cur).strip()
+            if stmt:
+                out.append(stmt)
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    tail = "".join(cur).strip()
+    if tail:
+        out.append(tail)
+    return out

@@ -23,7 +23,8 @@ from surrealdb_spark.catalog import Catalog
 from surrealdb_spark.dml import (Database, FieldDef, MutationError,
                                  TableDef)
 from surrealdb_spark.functions.geometry import GEOM_T as _GEOM_T
-from surrealdb_spark.sql.parser import Parser, Select, _parse_select_body
+from surrealdb_spark.sql.parser import (Parser, Select, _parse_select_body,
+                                        split_statements)
 from surrealdb_spark.values import infer_schema, local_frame
 
 
@@ -3194,8 +3195,6 @@ class StatementRunner:
         local LET scope layered over the caller's bindings
         (expr/block.rs)."""
         import re as _re
-
-        from surrealdb_spark.golden import split_statements
 
         binds = {**self.params_defined, **(params or {})}
         out = None

@@ -187,7 +187,7 @@ def test_define_index_kinds(spark, tmp_path):
     r.run("INSERT INTO vec [{id: 1, v: [1.0, 0.0]}, {id: 2, v: [0.0, 1.0]}]")
     r.run("DEFINE INDEX vec_v ON vec FIELDS v HNSW DIMENSION 2")
     signed = r.indexes["vec_v"]
-    assert set(signed.columns) == {"vec_id", "embedding", "__sig"}
+    assert set(signed.columns) == {"vec_id", "embedding", "__sig", "__mag"}
     assert signed.count() == 2
 
 

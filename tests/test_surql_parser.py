@@ -256,3 +256,20 @@ def test_dynamic_scan_param_source(spark):
     c = surql(spark, "SELECT VALUE o_orderkey FROM $recs", sf,
               params={"recs": ["orders:100", "orders:101"]})
     assert sorted(r["value"] for r in c.collect()) == [100, 101]
+
+
+def test_package_does_not_import_golden_harness():
+    """The statement splitter lives in sql/parser.py; no engine module
+    imports the golden-corpus test harness (`surrealdb_spark.golden`)."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "surrealdb_spark"
+    pat = re.compile(r"surrealdb_spark\.golden\b|"
+                     r"from\s+(surrealdb_spark|\.+)\s+import\s+golden\b|"
+                     r"from\s+\.+golden\b")
+    hits = [f"{p.relative_to(pkg)}:{i}"
+            for p in sorted(pkg.rglob("*.py")) if p.name != "golden.py"
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if pat.search(line)]
+    assert hits == []

@@ -2,16 +2,25 @@
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import functions as F
 
 from surrealdb_spark.catalog import Catalog
-from surrealdb_spark.pipeline.similarity import cosine_topk, srp_lsh_topk
+from surrealdb_spark.operators.knn import knn_join
+from surrealdb_spark.pipeline.similarity import srp_lsh_topk
+
+
+def _exact(q, emb, k):
+    """Brute-force cosine top-k over the embeddings, self excluded."""
+    return knn_join(q, emb, k, "cosine", "vec_id", "embedding", "vec_id",
+                    "embedding", exclude_self=True)
 
 
 def test_srp_lsh_recall(spark, sf_dir):
     emb = Catalog(spark, sf_dir).embeddings
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = cosine_topk(q, emb, 10, exclude_self=True)
+    exact = _exact(q, emb, 10)
     approx = srp_lsh_topk(q, emb, 10, dim=64, n_planes=16, bands=4, exclude_self=True)
     exact_pairs = {(r.q_id, r.c_id) for r in exact.collect()}
     approx_pairs = {(r.q_id, r.c_id) for r in approx.collect()}
@@ -36,7 +45,7 @@ def test_ivf_recall_and_shape(spark, sf_dir):
     emb = Catalog(spark, sf_dir).embeddings
     idx = ivf_build(emb, n_cells=8, iters=2)
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = cosine_topk(q, emb, 10, exclude_self=True)
+    exact = _exact(q, emb, 10)
     approx = idx.search(None, k=10, nprobe=3,
                         query_pred=F.col("vec_id") % 50 == 0,
                         exclude_self=True)
@@ -61,13 +70,31 @@ def test_ivf_nprobe_full_equals_exact(spark, sf_dir):
 
     emb = Catalog(spark, sf_dir).embeddings
     idx = ivf_build(emb, n_cells=4, iters=1)
-    exact = cosine_topk(emb.filter(F.col("vec_id") == 0), emb, 5,
-                        exclude_self=True)
-    # probing every cell degenerates to brute force → identical top-k
+    exact = _exact(emb.filter(F.col("vec_id") == 0), emb, 5)
+    # probing every cell degenerates to brute force → identical top-k,
+    # scored by the same pair scorer → identical dist bits
     full = idx.search(None, k=5, nprobe=4,
                       query_pred=F.col("vec_id") == 0, exclude_self=True)
-    assert [(r.q_id, r.c_id) for r in exact.collect()] == \
-        [(r.q_id, r.c_id) for r in full.collect()]
+
+    def bits(df):
+        return [(r.q_id, r.c_id, struct.pack("<d", r.dist), r.rank)
+                for r in df.orderBy("q_id", "rank").collect()]
+
+    assert bits(exact) == bits(full) and len(bits(full)) == 5
+
+
+def test_srp_dist_bitwise_matches_knn_join(spark, sf_dir):
+    """SRP-LSH re-scores its candidates with the knn pair scorer: every
+    returned pair's dist is bit-identical to knn_join's over that pair."""
+    emb = Catalog(spark, sf_dir).embeddings
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    got = srp_lsh_topk(q, emb, 10, dim=64, n_planes=16, bands=4,
+                       exclude_self=True).collect()
+    # k = corpus size: knn_join scores every (query, corpus) pair
+    ref = {(r.q_id, r.c_id): struct.pack("<d", r.dist)
+           for r in _exact(q, emb, emb.count()).collect()}
+    assert got and all(
+        struct.pack("<d", r.dist) == ref[(r.q_id, r.c_id)] for r in got)
 
 
 def test_srp_geometry_rule():
@@ -98,7 +125,7 @@ def test_srp_bucket_sizes_bounded(spark, sf_dir):
     rows = n_planes // bands
     signed = srp_sign(emb, srp_planes(n_planes, 64))
     buckets = (
-        _banded(signed, "id", "v", "s", bands, rows)
+        _banded(signed, "__sig", bands, rows)
         .groupBy("band", "bits").count().collect()
     )
     biggest = max(r["count"] for r in buckets)
@@ -109,13 +136,18 @@ def test_srp_bucket_sizes_bounded(spark, sf_dir):
 def test_cosine_pairs_bitwise_matches_sql_fold(spark, sf_dir):
     """The r13 Arrow-batched cosine_pairs must be BIT-identical to the SQL
     left-fold expression it replaced (same rounded multiply/add sequence,
-    same division points) — pair set AND sim doubles."""
-    import struct
-
+    same division points) — pair set AND sim doubles.  A null vector and a
+    pair of short vectors ride along: the fold's sim is NULL for a null
+    vector or a pair of different lengths, so neither yields a row, and
+    the two short vectors still pair with each other."""
     from surrealdb_spark.functions import vector as V
     from surrealdb_spark.pipeline.similarity import cosine_pairs
 
-    emb = Catalog(spark, sf_dir).embeddings.limit(300)
+    odd = spark.createDataFrame(
+        [(900001, None), (900002, [1.0, 2.0, 3.0]), (900003, [1.0, 2.0, 2.5])],
+        "vec_id bigint, embedding array<float>")
+    emb = (Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
+           .limit(300).unionByName(odd))
     got = {
         (r.id1, r.id2): struct.pack("<d", r.sim)
         for r in cosine_pairs(
@@ -141,3 +173,39 @@ def test_cosine_pairs_bitwise_matches_sql_fold(spark, sf_dir):
         .collect()
     }
     assert got == ref and len(got) > 0
+    assert (900002, 900003) in got
+
+
+def test_cosine_pairs_rejects_unordered_id_type(spark, sf_dir):
+    """Ids must be strings or integers: the kernel orders id1 < id2 in
+    numpy, which matches Spark's order only for those."""
+    import pytest
+
+    from surrealdb_spark.pipeline.similarity import cosine_pairs
+
+    emb = Catalog(spark, sf_dir).embeddings.limit(10).select(
+        F.col("vec_id").cast("double").alias("vec_id"), "embedding")
+    with pytest.raises(TypeError, match="string or integral id"):
+        cosine_pairs(emb, "vec_id", "embedding", 0.35, allow_quadratic=True)
+
+
+def test_knn_operator_metric_names(spark, tmp_path):
+    """`<|k, METRIC|>` ranks by the named vector::distance kind and names
+    an unknown one, instead of ranking by euclidean."""
+    import pytest
+
+    from surrealdb_spark.dml import Database
+    from surrealdb_spark.sql.statements import StatementRunner
+
+    r = StatementRunner(spark, Database(spark, str(tmp_path)))
+    r.run("CREATE v:2 SET emb = [1, 1, 1, 0]")
+    r.run("CREATE v:3 SET emb = [1.1, 1.1, 1.1, 1.1]")
+
+    def nearest(op):
+        return [x[0] for x in r.run(
+            f"SELECT VALUE id FROM v WHERE emb {op} [1, 1, 1, 1]").collect()]
+
+    assert nearest("<|1|>") == ["v:3"]
+    assert nearest("<|1, HAMMING|>") == ["v:2"]
+    with pytest.raises(ValueError, match="unsupported KNN distance: BOGUS"):
+        nearest("<|1, BOGUS|>")
