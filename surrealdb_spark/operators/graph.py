@@ -13,14 +13,16 @@ Reference semantics (surrealdb/surrealdb):
 
 Spark mapping: an edge table is a DataFrame with string record-id columns
 ``in``/``out`` (canonical form ``table:key``); one hop is one equi-join.
-Bounded recursion (``recurse``, ``recurse_paths``) goes through one core,
-``_traverse``, which picks its plan once from the edge count (Pregelix's
-in-memory vs dataflow choice): at or under ``LOCAL_EDGE_MAX_ROWS`` edges
-the whole traversal is one ``mapInPandas`` job over a broadcast adjacency
-dict; above it a driver loop runs one row-per-(start, node) level per
-round, each level localCheckpointed to truncate lineage.  Cycle handling
-follows recursion.rs:8-15: BFS never re-expands a visited node, and a
-+path never revisits a node of its own path.
+``_traverse`` is the one core of bounded graph recursion: ``recurse`` and
+``recurse_paths`` here, and SurrealQL's ``{min..max}`` recursion
+(``lookup.recurse_value``).  It takes one hop projection
+``(__here, __there, __piece)`` per step of a level and picks its plan once,
+from the edge count (Pregelix's in-memory vs dataflow choice): at or under
+``LOCAL_EDGE_MAX_ROWS`` edges the whole traversal is one ``mapInPandas``
+job over a broadcast adjacency dict; above it a driver loop runs one
+checkpointed level per round.  Cycle handling follows recursion.rs:8-15:
+BFS never re-expands a visited node, and a path never revisits a node of
+its own path.
 """
 
 from __future__ import annotations
@@ -36,13 +38,14 @@ IN, OUT = "in", "out"
 # Reference default recursion cap (core/src/cnf/mod.rs:53-54).
 RECURSION_LIMIT = 256
 # At or under this many edges the whole bounded traversal runs as ONE job:
-# the 2-column edge projection is collected once, broadcast as an adjacency
-# dict, and each task expands its partition's start nodes in-process
+# the edge projection is collected once, broadcast as an adjacency dict,
+# and each task expands its partition's start nodes in-process
 # (mapInPandas).  A driver-round loop costs ~0.25 s of job/broadcast/plan
 # machinery PER ROUND no matter how small the frontier is; one job costs it
 # once.  Same budget idea as a broadcast join: past it, the level loop in
 # _traverse is the shape that scales.
 LOCAL_EDGE_MAX_ROWS = 1_000_000
+SEP = "\x01"  # joins __ord pieces; sorts below every printable char
 _NODES = "start string, node string, depth int"
 
 
@@ -134,74 +137,160 @@ def reference_lookup(
     return start.join(referrers, referrers[ref_field] == start[start_id], "inner")
 
 
+def hop(edges: DataFrame, direction: str = "out", piece: Column | None = None) -> DataFrame:
+    """One step of a traversal level as a hop projection
+    ``(__here, __there, __piece)``: the edge's near and far ends for
+    ``direction``, and the step's ``__ord`` piece (empty when the caller
+    orders nothing)."""
+    here, there = (IN, OUT) if direction == "out" else (OUT, IN)
+    return edges.select(
+        F.col(here).alias("__here"), F.col(there).alias("__there"),
+        (F.lit("") if piece is None else piece).alias("__piece"),
+    )
+
+
 def _traverse(
-    seed: DataFrame,
-    edges: DataFrame,
-    direction: str,
+    starts: DataFrame,
+    hops: list[DataFrame],
     min_depth: int,
     max_depth: int,
     schema: str,
     expand,
     step,
-    out: tuple[Column, ...] = (),
+    init: tuple[Column, ...] = (),
+    out: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Bounded level-wise traversal, the one core of recurse/recurse_paths.
+    """Bounded level-wise traversal, the one core of graph recursion.
 
-    ``seed`` is level 0, one row per traversal: (start, node = start, and
-    any per-row state).  Returns ``schema``: (start, node, depth, *out) for
-    every level in [min_depth, max_depth].  The plan is chosen once, from
-    the edge count:
+    ``starts`` has a ``start`` column, and its other columns ride along:
+    each output row carries its input row's columns, so a caller's row
+    keys come back with their answers.  ``hops`` holds one hop projection
+    per step of a level.  Returns ``schema`` (start, node, depth, *out)
+    plus the carried columns, for every level in [min_depth, max_depth].
+    The plan is chosen once, from the edge count of all steps together:
+    ONE job collects up to LOCAL_EDGE_MAX_ROWS + 1 projection rows.
 
-    - local (≤ LOCAL_EDGE_MAX_ROWS): the edge projection is collected once
-      (Arrow) and broadcast as an adjacency dict; ``expand(adj, s)`` yields
-      start ``s``'s output rows (node, depth, ...) in-process, every start
-      in ONE mapInPandas job.
-    - distributed: ``step(frontier, e, seen)`` builds the next level from
-      the current one, the edge projection and every level so far.  Each
-      level is lazily localCheckpointed, and ONE count job per level both
-      materializes it (every partition persisted under the checkpoint) and
-      probes for emptiness.  Levels at depth ≥ min_depth are unioned.
+    - local (≤ LOCAL_EDGE_MAX_ROWS): those rows (Arrow) are broadcast as
+      one adjacency dict per step, ``here -> [(there, piece)]``;
+      ``expand(adjs, s, max_depth)`` yields start ``s``'s rows (node,
+      depth, ...) in-process, every start in ONE mapInPandas job.  A start
+      repeated within a batch expands once.
+    - distributed: the projections are checkpointed once; level 0 is
+      (start, node = start, *init) for each distinct start, and
+      ``step(frontier, hops, seen)`` builds the next level from the
+      current one and every level so far.  Each level is lazily
+      localCheckpointed, and ONE count job per level both materializes it
+      and probes for emptiness.  The levels join back to ``starts``.
     """
-    if max_depth > RECURSION_LIMIT:
-        raise ValueError(f"max_depth {max_depth} exceeds IDIOM_RECURSION_LIMIT {RECURSION_LIMIT}")
-    here, there = (IN, OUT) if direction == "out" else (OUT, IN)
-    e = edges.select(F.col(here).alias("__here"), F.col(there).alias("__there"))
+    carry = [f for f in starts.schema.fields if f.name != "start"]
+    e = reduce(DataFrame.unionByName, [
+        h.select("__here", "__there", "__piece", F.lit(i).alias("__step"))
+        for i, h in enumerate(hops)
+    ])
 
-    if e.count() <= LOCAL_EDGE_MAX_ROWS:
-        pairs = e.toPandas()
-        adj: dict = {}
-        for h, t in zip(pairs["__here"].values, pairs["__there"].values):
-            adj.setdefault(h, []).append(t)
-        bc = seed.sparkSession.sparkContext.broadcast(adj)
+    pairs = e.limit(LOCAL_EDGE_MAX_ROWS + 1).toPandas()
+    if len(pairs) <= LOCAL_EDGE_MAX_ROWS:
+        adjs: list[dict] = [{} for _ in hops]
+        for i, h, t, p in zip(pairs["__step"].values, pairs["__here"].values,
+                              pairs["__there"].values, pairs["__piece"].values):
+            adjs[i].setdefault(h, []).append((t, p))
+        bc = starts.sparkSession.sparkContext.broadcast(adjs)
+        schema += "".join(f", {f.name} {f.dataType.simpleString()}" for f in carry)
         names = [c.split()[0] for c in schema.split(",")]
+        cols = ["start"] + [f.name for f in carry]
 
         def run(batches):
             import pandas as pd
 
             a = bc.value
             for b in batches:
-                rows = [(s, *r) for s in b["start"].values for r in expand(a, s)]
+                memo: dict = {}
+                rows = []
+                for s, *kept in zip(*(b[c].values for c in cols)):
+                    if s is None:
+                        continue
+                    if s not in memo:
+                        memo[s] = [r for r in expand(a, s, max_depth) if r[1] >= min_depth]
+                    rows.extend((s, *r, *kept) for r in memo[s])
                 yield pd.DataFrame.from_records(rows, columns=names).astype(
                     {"depth": "int32"}
                 )
 
-        return seed.select("start").mapInPandas(run, schema)
+        return starts.mapInPandas(run, schema)
 
-    # Materialize the edge projection once: every level's join would
-    # otherwise re-resolve and re-scan the edge source.
+    # Materialize the projections once: every level's join would otherwise
+    # re-resolve and re-scan the edge sources.
     e = e.localCheckpoint(eager=True)
-    seen = [seed.localCheckpoint(eager=True)]
+    hops = [e.filter(F.col("__step") == i).drop("__step") for i in range(len(hops))]
+    seed = starts.select("start").where(F.col("start").isNotNull()).distinct()
+    seen = [seed.select("start", F.col("start").alias("node"), *init).localCheckpoint(eager=True)]
     levels: list[DataFrame] = []
     for depth in range(1, max_depth + 1):
-        nxt = step(seen[-1], e, seen).localCheckpoint(eager=False)
+        nxt = step(seen[-1], hops, seen).localCheckpoint(eager=False)
         if not nxt.count():
             break
         if depth >= min_depth:
             levels.append(nxt.select("start", "node", F.lit(depth).alias("depth"), *out))
         seen.append(nxt)
-    if not levels:
-        return local_frame(seed.sparkSession, [], schema)
-    return reduce(DataFrame.unionByName, levels)
+    found = reduce(DataFrame.unionByName, levels) if levels else \
+        local_frame(starts.sparkSession, [], schema)
+    return found.join(starts, "start")
+
+
+def _paths(no_revisit: bool, flag_cycles: bool = False) -> dict:
+    """Path enumeration for ``_traverse``: every walk of each start, one
+    row per (path, depth) as (start, node, depth, __ord, __path).
+
+    Each level applies every step in turn; ``__ord`` appends
+    ``SEP + piece`` per step and ``__path`` each step's node.  With
+    ``no_revisit`` a path never revisits one of its own nodes
+    (recursion.rs:8-15); ``flag_cycles`` turns such a revisit into one
+    marker row with a null node, for the caller to raise on.
+    """
+
+    def expand(adjs, s, max_depth):
+        frontier = [(s, "", (s,))]
+        for d in range(1, max_depth + 1):
+            for adj in adjs:
+                frontier = [(v, o + SEP + pc, p + (v,))
+                            for u, o, p in frontier for v, pc in adj.get(u, ())]
+            if no_revisit:
+                kept = [f for f in frontier if f[0] not in f[2][:-1]]
+                if flag_cycles and len(kept) < len(frontier):
+                    yield None, d, None, None
+                    return
+                frontier = kept
+            if not frontier:
+                return
+            for v, o, p in frontier:
+                yield v, d, o, list(p)
+
+    def step(frontier, hops, seen):
+        nxt = frontier
+        for h in hops:
+            nxt = nxt.join(h, F.col("node") == F.col("__here")).select(
+                "start", F.col("__there").alias("node"),
+                F.concat("__ord", F.lit(SEP), "__piece").alias("__ord"),
+                F.array_append("__path", F.col("__there")).alias("__path"),
+            )
+        if not no_revisit:
+            return nxt
+        rev = F.array_contains(F.slice("__path", 1, F.size("__path") - 1), F.col("node"))
+        if flag_cycles:
+            return nxt.withColumn("node", F.when(~rev, F.col("node")))
+        return nxt.filter(~rev)
+
+    return dict(
+        schema=_NODES + ", __ord string, __path array<string>",
+        expand=expand, step=step,
+        init=(F.lit("").alias("__ord"), F.array("start").alias("__path")),
+        out=("__ord", "__path"),
+    )
+
+
+def _check_depth(max_depth: int) -> None:
+    if max_depth > RECURSION_LIMIT:
+        raise ValueError(f"max_depth {max_depth} exceeds IDIOM_RECURSION_LIMIT {RECURSION_LIMIT}")
 
 
 def recurse(
@@ -221,35 +310,35 @@ def recurse(
     is the +collect reading).  Duplicate start rows traverse once.
     """
 
-    def bfs(adj, s):
+    def bfs(adjs, s, max_depth):
+        adj = adjs[0]
         visited, frontier = {s}, [s]
         for d in range(1, max_depth + 1):
             nxt = []
             for u in frontier:
-                for v in adj.get(u, ()):
+                for v, _ in adj.get(u, ()):
                     if v not in visited:
                         visited.add(v)
                         nxt.append(v)
             if not nxt:
                 return
-            if d >= min_depth:
-                for v in nxt:
-                    yield v, d
+            for v in nxt:
+                yield v, d
             frontier = nxt
 
-    def step(frontier, e, seen):
+    def step(frontier, hops, seen):
         # distinct ∘ anti-join against every earlier level ≡ the visited set
         return (
-            frontier.join(e, F.col("node") == F.col("__here"))
+            frontier.join(hops[0], F.col("node") == F.col("__here"))
             .select("start", F.col("__there").alias("node"))
             .distinct()
             .join(reduce(DataFrame.unionByName, seen), ["start", "node"], "left_anti")
         )
 
-    seed = start.select(F.col(start_id).alias("start")).distinct()
+    _check_depth(max_depth)
     return _traverse(
-        seed.select("start", F.col("start").alias("node")),
-        edges, direction, min_depth, max_depth, _NODES, bfs, step,
+        start.select(F.col(start_id).alias("start")).distinct(), [hop(edges, direction)],
+        min_depth, max_depth, _NODES, bfs, step,
     )
 
 
@@ -287,30 +376,7 @@ def recurse_paths(
     same node are all kept (that's the +path semantics), and every input
     row — duplicates included — gets its own result set.
     """
-
-    def paths(adj, s):
-        frontier = [(s, (s,))]
-        for d in range(1, max_depth + 1):
-            frontier = [
-                (v, p + (v,)) for u, p in frontier for v in adj.get(u, ()) if v not in p
-            ]
-            if not frontier:
-                return
-            if d >= min_depth:
-                for v, p in frontier:
-                    yield v, d, "->".join(p)
-
-    def step(frontier, e, seen):
-        there = F.col("__there")
-        return (
-            frontier.join(e, F.col("node") == F.col("__here"))
-            .filter(~F.array_contains("__path", there))
-            .select("start", there.alias("node"), F.array_append("__path", there).alias("__path"))
-        )
-
-    sid = F.col(start_id)
-    return _traverse(
-        start.select(sid.alias("start"), sid.alias("node"), F.array(sid).alias("__path")),
-        edges, direction, min_depth, max_depth, _NODES + ", path string", paths, step,
-        (F.array_join("__path", "->").alias("path"),),
-    )
+    _check_depth(max_depth)
+    found = _traverse(start.select(F.col(start_id).alias("start")), [hop(edges, direction)],
+                      min_depth, max_depth, **_paths(no_revisit=True))
+    return found.select("start", "node", "depth", F.array_join("__path", "->").alias("path"))

@@ -27,14 +27,16 @@ column.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from surrealdb_spark.operators.graph import RECURSION_LIMIT
+from surrealdb_spark.operators import graph as G
+from surrealdb_spark.operators.graph import RECURSION_LIMIT, SEP
 from surrealdb_spark.values import local_frame
 
-SEP = "\x01"  # sorts below every printable char → correct (ft, fk) order
 
 
 def _rid_table(c: Column) -> Column:
@@ -88,6 +90,10 @@ class LookupError_(ValueError):
 # driver-side cap for the recursive-destructure tree assembler (an OLTP
 # point-query path): loud failure beats a silent OOM on a celebrity node
 _DESTRUCTURE_CAP = 10_000
+# distinct record-id tables a frontier or a record-link chain may span
+_LINK_TABLE_CAP = 32
+# a step of a recursion level (graph.hop)
+_HOP = "__here string, __there string, __piece string"
 
 
 def attach_lookups(spark: SparkSession, df: DataFrame, cat, specs: list,
@@ -621,11 +627,10 @@ def recursive_destructure_trees(spark, cat, start_rids: list, bounds,
 
     The result is a recursively-typed document (unbounded nesting), which
     no static Spark schema can carry — so this is the OLTP point-query
-    path: a level-wise distributed BFS collects the reachable closure
-    (one filtered edge scan per level — same frontier pattern as
-    recurse_value, shared across ALL roots, so N roots cost the same
-    scans as one), then each tree assembles driver-side from the
-    collected maps.  Work is bounded by the roots' reachable subgraph,
+    path: a level-wise driver BFS collects the reachable closure (one
+    filtered edge scan per level, shared across ALL roots, so N roots
+    cost the same scans as one), then each tree assembles driver-side
+    from the collected maps.  Work is bounded by the roots' reachable subgraph,
     not the table size; every materialization is loudly capped."""
     from surrealdb_spark.values import key_sort_text, strip_absent
 
@@ -691,8 +696,8 @@ def recursive_destructure_trees(spark, cat, start_rids: list, bounds,
             plain.append(name)
 
     # BFS: collect children maps per traversal field, level by level
-    # (one filtered scan per level per field — the recurse_value frontier
-    # pattern, bounded by the root's reachable subgraph).  This is an
+    # (one filtered scan per level per field, bounded by the root's
+    # reachable subgraph; its own loop, not graph._traverse).  This is an
     # OLTP point-query path (one root record's tree); a celebrity node
     # would blow the driver, so every materialization is LOUDLY capped —
     # same contract as statements._bounded_collect.
@@ -859,13 +864,8 @@ def recursive_destructure_trees(spark, cat, start_rids: list, bounds,
 #     (NONE when unreachable);
 #   - unbounded `..` applies the per-path no-revisit cycle rule
 #     (recursion.rs:8-15) and the depth cap 256 (cnf/mod.rs:53).
-
-
-# Broadcast budget for a recursion's per-step hop projection (3 record-id
-# string columns, ~1M rows ≈ a 100 MB hash relation): the checkpointed
-# projection has no stats, so the planner would sort-merge every level
-# without the hint; above the budget its choice stands.
-_BCAST_HOP_MAX_ROWS = 1_000_000
+# Every kind runs on graph._traverse: one plan choice from the edge count
+# (LOCAL_EDGE_MAX_ROWS), then the per-kind grouping below, per row.
 
 
 def validate_recursion_bounds(lo, hi) -> None:
@@ -879,298 +879,62 @@ def validate_recursion_bounds(lo, hi) -> None:
             f"Found {hi} for bound but expected {RECURSION_LIMIT} at most.")
 
 
-def _driver_chain_recurse(df: DataFrame, cat, slot: str, base, rng, instr,
-                        steps, trailing_field, params, compile_expr):
-    """OLTP fast path: `{n..m}` repeat over SCALAR record-link fields
-    (`a:1.{..}.link`) walks driver-side over ONE bounded collect of the
-    link columns instead of up-to-256 sequential Spark joins — the
-    reference's KV pointer-chase equivalent (recursion.rs repeat over
-    Thing values).  Returns None (bail to the distributed level loop)
-    when the shape doesn't apply or a cap trips; the distributed loop
-    remains the 100 TB path for real graph frontiers.
-    """
-    lo, hi = rng
-    lo_eff = max(1 if lo is None else lo, 1)
-    unbounded = hi is None
-    hi_eff = RECURSION_LIMIT if unbounded else min(hi, RECURSION_LIMIT)
-    if instr.get("kind", "last") != "last" or "shortest" in instr \
-            or instr.get("inclusive") or trailing_field is not None:
-        return None
-    if not steps or not all(s[0] == "link" for s in steps):
-        return None
-    fields = [s[1] for s in steps]
-    spark = df.sparkSession
-
-    try:
-        seed = _seed_col(base, params, compile_expr)
-        roots = df.select(F.col("id").alias("__rk"),
-                          seed.alias("__seed")).distinct() \
-            .limit(10_001).collect()
-    except Exception:
-        return None
-    if len(roots) > 10_000:
-        return None
-
-    maps: dict[str, dict] = {}
-
-    def table_map(tb: str) -> dict | None:
-        if tb in maps:
-            return maps[tb]
-        if len(maps) >= 8:
-            return None
-        try:
-            t = cat.table(tb)
-        except Exception:
-            maps[tb] = {}
-            return maps[tb]
-        if "id" not in t.columns:
-            maps[tb] = {}
-            return maps[tb]
-        rows = t.limit(20_001).collect()
-        if len(rows) > 20_000:
-            return None  # too big for a driver map — distributed path
-        maps[tb] = {r["id"]: r.asDict(recursive=True) for r in rows}
-        return maps[tb]
-
-    out_rows = []
-    for r in roots:
-        node = r["__seed"]
-        if not isinstance(node, str) or ":" not in node:
-            out_rows.append((r["__rk"], None))
-            continue
-        visited = {node}
-        depth = 0
-        while depth < hi_eff:
-            cur = node
-            dead = False
-            for chain in fields:
-                # one link hop: deref the current record, follow the
-                # field chain (nested structs deref record ids en route)
-                tb = str(cur).partition(":")[0]
-                m = table_map(tb)
-                if m is None:
-                    return None  # cap tripped: distributed path
-                val = m.get(cur)
-                for f_ in chain:
-                    if isinstance(val, str) and ":" in val:
-                        m2 = table_map(str(val).partition(":")[0])
-                        if m2 is None:
-                            return None
-                        val = m2.get(val)
-                    if not isinstance(val, dict):
-                        val = None
-                        break
-                    val = val.get(f_)
-                if isinstance(val, list):
-                    return None  # array hop: not a scalar chain
-                if not isinstance(val, str) or ":" not in val:
-                    dead = True
-                    break
-                cur = val
-            if dead:
-                break
-            if unbounded and cur in visited:
-                break  # cycle rule: a path never revisits its own node
-            depth += 1
-            node = cur
-            visited.add(cur)
-        if unbounded and depth >= RECURSION_LIMIT:
-            # one more live hop means the reference would keep going —
-            # that's the recursion limit error (cnf/mod.rs:53)
-            cur, alive = node, True
-            for chain in fields:
-                tb = str(cur).partition(":")[0]
-                m = table_map(tb)
-                if m is None:
-                    return None
-                val = m.get(cur)
-                for f_ in chain:
-                    if isinstance(val, str) and ":" in val:
-                        m2 = table_map(str(val).partition(":")[0])
-                        if m2 is None:
-                            return None
-                        val = m2.get(val)
-                    if not isinstance(val, dict):
-                        val = None
-                        break
-                    val = val.get(f_)
-                if isinstance(val, str) and ":" in val:
-                    cur = val
-                else:
-                    alive = False
-                    break
-            if alive and cur not in visited:
-                raise LookupError_(
-                    f"Exceeded the idiom recursion limit of "
-                    f"{RECURSION_LIMIT}.")
-        out_rows.append((r["__rk"], node if depth >= lo_eff else None))
-
-    res = local_frame(spark, out_rows, f"__rk string, `{slot}` string")
-    return df.join(res, df["id"] == res["__rk"], "left").drop("__rk")
-
-
 def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
                   trailing_field: str | None, params, compile_expr):
-    """Attach the recursion result for each row of ``df`` as ``slot``.
+    """The recursion result for each row of ``df``: ``(__rk, slot)``, one
+    row per record id, to join back to ``df``.
 
-    One Spark join per (depth × pair-step) with eager localCheckpoint per
-    level (lineage truncation — the GraphFrames iteration pattern); no
-    driver-side row loops, so the same plan runs on a 1000-executor
-    frontier.
+    Each step of a level becomes one hop projection (``_edge_hop`` or
+    ``_link_hop``), and ``graph._traverse`` enumerates every path of each
+    distinct seed once, on its one plan choice.  The rows at every depth
+    join back to the row keys ``__rk``; the per-kind post-processing below
+    groups per ``__rk``, so each row's answer is its own.
     """
     lo, hi = rng
     validate_recursion_bounds(lo, hi)
-    lo = 0 if lo is None else lo
+    lo = 1 if lo is None else lo
     unbounded = hi is None
-    hi_eff = RECURSION_LIMIT if unbounded else min(hi, RECURSION_LIMIT)
-    kind = instr.get("kind", "last")
-    fast = _driver_chain_recurse(df, cat, slot, base, (lo, hi), instr,
-                                 steps, trailing_field, params,
-                                 compile_expr)
-    if fast is not None:
-        return fast
-    if "shortest" in instr:
-        kind = "shortest"
-    no_revisit = unbounded
+    kind = "shortest" if "shortest" in instr else instr.get("kind", "last")
     inclusive = bool(instr.get("inclusive"))
-
-    seed = _seed_col(base, params, compile_expr)
-    frontier = df.select(
-        F.col("id").alias("__rk"), seed.alias("__seed"),
-        seed.alias("__node"), F.lit("").alias("__ord"),
-        F.array(seed).alias("__path"),
-    ).distinct().localCheckpoint(eager=True)
-
-    levels: list[DataFrame] = []
-    reached = 0
-    scalar_chain = all(s[0] == "link" for s in steps)
-    # Per-step hop projections built ONCE, not once per level (r13): each
-    # level's job otherwise re-resolves and re-scans the edge source, and
-    # — the frontier being a checkpointed RDD with no size statistics —
-    # sort-merge-joins it every level.  Multi-level traversals materialize
-    # the projection (one count job doubles as the materializer) and
-    # broadcast-hint it under the same row budget graph.recurse uses.
-    hops: dict[int, tuple] = {}
-    hop_counts: list[int] = []
-    for si, step in enumerate(steps):
-        if step[0] == "link":
-            continue
-        (dirn, edge, target) = step
-        e = edge_df(cat, edge)
-        if e is None:
-            hops[si] = None
-            continue
-        here, there = ("in", "out") if dirn == "out" else ("out", "in")
-        hop = e.select(
-            F.col(here).alias("__src"), F.col(there).alias("__dst"),
-            F.concat(F.lit(edge), F.lit(SEP), _kv_key(F.col("id"))
-                     ).alias("__piece"),
-        )
-        if target != "?":
-            hop = hop.filter(_rid_table(F.col("__dst")) == target)
-        if hi_eff >= 2:
-            hop = hop.localCheckpoint(eager=False)
-            n_hop = hop.count()
-            hop_counts.append(n_hop)
-            if n_hop <= _BCAST_HOP_MAX_ROWS:
-                hop = F.broadcast(hop)
-        hops[si] = hop
-    # Lazy-level mode (r13): for a small, BOUNDED default-kind recursion
-    # over edge steps only, skip every per-level checkpoint/probe job and
-    # resolve "the last non-empty level" inside the ONE final job (filter
-    # against a broadcast scalar max(__depth)).  A depth-d lazy plan
-    # recomputes level k in levels k..d, so it is gated on small hop
-    # tables (broadcast-cheap recompute) and small d; the materialized
-    # loop below stays the scale path, and cycle/timeout semantics
-    # (unbounded) always take it.
-    lazy_levels = (
-        kind == "last"
-        and not no_revisit
-        and 2 <= hi_eff <= 8
-        and steps
-        and all(s[0] != "link" for s in steps)
-        and all(hops.get(i) is not None for i in range(len(steps)))
-        and hop_counts
-        and max(hop_counts) <= _BCAST_HOP_MAX_ROWS
-    )
-    for depth in range(1, hi_eff + 1):
-        nxt = frontier
-        for si, step in enumerate(steps):
-            if step[0] == "link":
-                nxt, was_scalar = _link_hop(nxt, cat, step[1])
-                scalar_chain = scalar_chain and was_scalar
-                continue
-            hop = hops[si]
-            if hop is None:
-                nxt = nxt.limit(0)
-                break
-            nxt = (
-                nxt.join(hop, nxt["__node"] == hop["__src"])
-                .select(
-                    "__rk", "__seed",
-                    F.col("__dst").alias("__node"),
-                    F.concat(F.col("__ord"), F.lit(SEP),
-                             F.col("__piece")).alias("__ord"),
-                    F.array_append(F.col("__path"),
-                                   F.col("__dst")).alias("__path"),
-                )
-            )
-        if no_revisit:
-            revisits = F.array_contains(
-                F.slice(F.col("__path"), 1,
-                        F.size(F.col("__path")) - 1), F.col("__node"))
-            if kind == "last" and params.get("__timeout_ns__"):
-                # plain `{..}` RepeatRecurse never converges on a cyclic
-                # graph — the reference spins until TIMEOUT fires
-                # (graph/timeout.surql expects the timeout error); a
-                # detected cycle makes the timeout inevitable, so raise
-                # deterministically instead of burning wall-clock
-                if not nxt.filter(revisits).isEmpty():
-                    raise LookupError_(
-                        "The query was not executed because it exceeded "
-                        "the timeout")
-            # cycle rule: a path never revisits one of its own nodes
-            nxt = nxt.filter(~revisits)
-        if lazy_levels:
-            levels.append(nxt.withColumn("__depth", F.lit(depth)))
-            frontier = nxt
-            continue
-        # ONE job per level (r13): count() both materializes the lazily-
-        # marked checkpoint (every partition computed and persisted under
-        # it — same lineage truncation as eager) and answers the emptiness
-        # probe, where eager-checkpoint + isEmpty paid two driver rounds.
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        reached = depth
-        levels.append(nxt.withColumn("__depth", F.lit(depth)))
-        frontier = nxt
+    # A plain `{..}` must stop by itself: a path alive one level past the
+    # cap is the recursion limit error (cnf/mod.rs:53), and a revisit
+    # under TIMEOUT is the timeout error — the reference spins on a cycle
+    # until TIMEOUT fires (graph/timeout.surql), so raise it up front.
+    strict = unbounded and kind == "last"
+    hi_eff = RECURSION_LIMIT + strict if unbounded else hi
 
     spark = df.sparkSession
+    seed = _seed_col(base, params, compile_expr)
+    keys = df.select(F.col("id").alias("__rk"), seed.cast("string").alias("start")).distinct()
+    rks = keys.select("__rk")
+    scalar_chain = False
+    if steps[0][0] == "link":
+        hops, scalar_chain = _link_hop(keys, cat, steps[0][1])
+    else:
+        hops = [_edge_hop(spark, cat, *st) for st in steps]
+    found = G._traverse(keys, hops, 1, hi_eff, **G._paths(
+        no_revisit=unbounded, flag_cycles=strict and bool(params.get("__timeout_ns__"))))
+    if strict:
+        found = found.localCheckpoint(eager=False)
+        deepest, cycles = found.agg(
+            F.max("depth"), F.count(F.when(F.col("node").isNull(), 1))).first()
+        if cycles:
+            raise LookupError_(
+                "The query was not executed because it exceeded the timeout")
+        if (deepest or 0) > RECURSION_LIMIT:
+            raise LookupError_(
+                f"Exceeded the idiom recursion limit of {RECURSION_LIMIT}.")
+    levels = found.select(
+        "__rk", F.col("node").alias("__node"), "__ord", "__path",
+        F.col("depth").alias("__depth"))
+    per_rk = Window.partitionBy("__rk")
+    # each row's frontier at its last non-empty level
+    last = levels.withColumn("__mx", F.max("__depth").over(per_rk)) \
+        .filter(F.col("__depth") == F.col("__mx"))
+
     if kind == "last":
-        if lazy_levels:
-            allr = levels[0]
-            for lv in levels[1:]:
-                allr = allr.unionByName(lv)
-            allr = allr.select("__rk", "__node", "__ord", "__depth")
-            # last non-empty level ≡ rows at the global max depth, gated
-            # on the min bound — the same levels[-1]/reached logic, but
-            # decided inside the plan instead of by driver probes.
-            mx = allr.agg(F.max("__depth").alias("__mx"))
-            rows = (
-                allr.crossJoin(F.broadcast(mx))
-                .filter(
-                    (F.col("__depth") == F.col("__mx"))
-                    & (F.col("__mx") >= max(lo, 1))
-                )
-                .select("__rk", "__node", "__ord", "__depth")
-            )
-        elif not levels or reached < max(lo, 1):
-            rows = local_frame(spark, [], "__rk string, __node string, "
-                                          "__ord string, __depth int")
-        else:
-            rows = levels[-1].select("__rk", "__node", "__ord", "__depth")
-        out = _nest_nodes(df, cat, slot, rows, steps, trailing_field,
+        rows = last.filter(F.col("__mx") >= lo)  # gated on the min bound
+        out = _nest_nodes(rks, cat, slot, rows, steps, trailing_field,
                           sort_by_depth=False)
         if scalar_chain:
             # a scalar record-link chain repeats to a VALUE, not an array
@@ -1182,53 +946,31 @@ def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
     if kind == "collect":
         # min-depth gate: `.{2..+collect}` collects depths >= 2 only
         # (graph/collect_min_depth.surql)
-        parts = [lv.select("__rk", "__node", "__ord", "__depth")
-                 for d, lv in enumerate(levels, start=1) if d >= max(lo, 1)]
+        rows = levels.filter(F.col("__depth") >= lo).select(
+            "__rk", "__node", "__ord", "__depth")
         if inclusive:
-            base_rows = df.select(
-                F.col("id").alias("__rk"),
-                _seed_col(base, params, compile_expr).alias("__node"),
-                F.lit("").alias("__ord"), F.lit(0).alias("__depth"))
-            parts = [base_rows] + parts
-        if not parts:
-            rows = local_frame(spark, [], "__rk string, __node string, "
-                                          "__ord string, __depth int")
-        else:
-            rows = parts[0]
-            for p in parts[1:]:
-                rows = rows.unionByName(p)
-            # dedup: keep each node's first reach (min depth, then order)
-            w = Window.partitionBy("__rk", "__node").orderBy(
-                F.col("__depth").asc(), F.col("__ord").asc())
-            rows = rows.withColumn("__rn", F.row_number().over(w)) \
-                .filter(F.col("__rn") == 1).drop("__rn")
-        return _nest_nodes(df, cat, slot, rows, steps, trailing_field,
+            rows = keys.select(
+                "__rk", F.col("start").alias("__node"),
+                F.lit("").alias("__ord"), F.lit(0).alias("__depth"),
+            ).unionByName(rows)
+        # dedup: keep each node's first reach (min depth, then order)
+        w = Window.partitionBy("__rk", "__node").orderBy(
+            F.col("__depth").asc(), F.col("__ord").asc())
+        rows = rows.withColumn("__rn", F.row_number().over(w)) \
+            .filter(F.col("__rn") == 1).drop("__rn")
+        return _nest_nodes(rks, cat, slot, rows, steps, trailing_field,
                            sort_by_depth=True)
+    val = F.col("__path") if inclusive else F.slice(
+        F.col("__path"), 2, F.greatest(F.size(F.col("__path")) - 1, F.lit(0)))
     if kind == "path":
-        if not levels:
-            return df.withColumn(slot, F.array().cast("array<array<string>>"))
-        leaves = _terminated_paths(levels, hi_eff)
+        leaves = _terminated_paths(levels)
         if trailing_field is not None and trailing_field[0] == "field":
             # `.{n+path}(...).name` — each path element derefs through
             # its record's field (multi-table union map;
             # idiom/recursion_record_links.surql)
             leaves = _map_path_field(leaves, cat, trailing_field[1])
-        if inclusive:
-            val = F.col("__path")
-        else:
-            val = F.slice(F.col("__path"), 2,
-                          F.greatest(F.size(F.col("__path")) - 1, F.lit(0)))
-        agg = (
-            leaves.select(
-                "__rk",
-                F.struct(
-                    F.col("__depth").alias("d"), F.col("__ord").alias("o"),
-                    val.alias("v")).alias("__s"))
-            .groupBy("__rk")
-            .agg(F.transform(F.array_sort(F.collect_list("__s")),
-                             lambda x: x["v"]).alias(slot))
-        )
-        out = df.join(agg, df["id"] == agg["__rk"], "left").drop("__rk")
+        agg = _nest_paths(leaves, slot, val, F.col("__depth"))
+        out = rks.join(agg, "__rk", "left")
         return out.withColumn(slot, F.coalesce(
             F.col(slot), F.array().cast("array<array<string>>")))
     if kind == "shortest":
@@ -1239,68 +981,59 @@ def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
             tgt_val = str(params.get(tgt[1]))
         else:
             tgt_val = tgt[1] if tgt[0] in ("lit", "ulit") else str(tgt[1])
-        hits = None
-        for lv in levels:
-            h = lv.filter(F.col("__node") == F.lit(tgt_val)).select(
-                "__rk", "__ord", "__path", "__depth")
-            hits = h if hits is None else hits.unionByName(h)
-        if hits is None:
-            hits = local_frame(
-                spark, [], "__rk string, __ord string, __path array<string>, "
-                           "__depth int")
-        hits = hits.localCheckpoint(eager=True)
-        if hits.isEmpty() and not unbounded and levels:
+        hits = levels.filter(F.col("__node") == F.lit(tgt_val))
+        if not unbounded and hits.isEmpty():
             # target unreached within the bound: the recursion stops at the
             # bound and yields the frontier PATHS, nested like +path
-            # (golden: graph/path_shortest.surql `.{..3+shortest=...}`)
-            leaves = levels[-1]
-            val = F.col("__path") if inclusive else F.slice(
-                F.col("__path"), 2,
-                F.greatest(F.size(F.col("__path")) - 1, F.lit(0)))
-            agg = (
-                leaves.select("__rk", F.struct(
-                    F.col("__ord").alias("o"), val.alias("v")).alias("__s"))
-                .groupBy("__rk")
-                .agg(F.transform(F.array_sort(F.collect_list("__s")),
-                                 lambda x: x["v"]).alias(slot))
-            )
-            return df.join(agg, df["id"] == agg["__rk"], "left").drop("__rk")
-        w = Window.partitionBy("__rk").orderBy(
-            F.col("__depth").asc(), F.col("__ord").asc())
+            # (golden: graph/path_shortest.surql `.{..3+shortest=...}`).
+            # A column holds one type, so only a SELECT where no row
+            # reaches the target takes this form.
+            return rks.join(_nest_paths(last, slot, val), "__rk", "left")
+        w = per_rk.orderBy(F.col("__depth").asc(), F.col("__ord").asc())
         best = hits.withColumn("__rn", F.row_number().over(w)) \
             .filter(F.col("__rn") == 1)
-        val = F.col("__path") if inclusive else F.slice(
-            F.col("__path"), 2, F.greatest(F.size(F.col("__path")) - 1,
-                                           F.lit(0)))
-        agg = best.select("__rk", val.alias(slot))
-        return df.join(agg, df["id"] == agg["__rk"], "left").drop("__rk")
+        return rks.join(best.select("__rk", val.alias(slot)), "__rk", "left")
     raise LookupError_(f"unknown recursion kind {kind!r}")
 
 
-def _terminated_paths(levels: list[DataFrame], hi: int) -> DataFrame:
+def _nest_paths(leaves, slot: str, val: Column, *order: Column) -> DataFrame:
+    """(__rk, slot): each row's path values ``val``, ordered by ``order``
+    then traversal order."""
+    keys = [o.alias(f"k{i}") for i, o in enumerate(order)]
+    return (
+        leaves.select("__rk", F.struct(
+            *keys, F.col("__ord").alias("o"), val.alias("v")).alias("__s"))
+        .groupBy("__rk")
+        .agg(F.transform(F.array_sort(F.collect_list("__s")),
+                         lambda x: x["v"]).alias(slot))
+    )
+
+
+def _edge_hop(spark, cat, dirn: str, edge: str, target: str) -> DataFrame:
+    """An edge step as a hop projection: the piece is the edge's KV-order
+    key; a named target keeps only the far ends in that table."""
+    e = edge_df(cat, edge)
+    if e is None:
+        return local_frame(spark, [], _HOP)
+    h = G.hop(e, dirn, F.concat(F.lit(edge), F.lit(SEP), _kv_key(F.col("id"))))
+    if target != "?":
+        h = h.filter(_rid_table(F.col("__there")) == target)
+    return h
+
+
+def _terminated_paths(levels: DataFrame) -> DataFrame:
     """Paths that ended: no child at the next level (dead end) or at the
     depth bound.  Linked by parent path (child path minus its last node)."""
-    outs = []
-    for i, lv in enumerate(levels):
-        if i + 1 < len(levels):
-            child_parents = levels[i + 1].select(
-                F.col("__rk").alias("__crk"),
-                F.slice(F.col("__path"), 1,
-                        F.size(F.col("__path")) - 1).alias("__ppath"),
-            ).distinct()
-            dead = lv.join(
-                child_parents,
-                (lv["__rk"] == child_parents["__crk"])
-                & (lv["__path"] == child_parents["__ppath"]),
-                "left_anti",
-            )
-            outs.append(dead.select("__rk", "__ord", "__path", "__depth"))
-        else:
-            outs.append(lv.select("__rk", "__ord", "__path", "__depth"))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    child_parents = levels.select(
+        F.col("__rk").alias("__crk"),
+        F.slice(F.col("__path"), 1, F.size(F.col("__path")) - 1).alias("__ppath"),
+    ).distinct()
+    return levels.join(
+        child_parents,
+        (levels["__rk"] == child_parents["__crk"])
+        & (levels["__path"] == child_parents["__ppath"]),
+        "left_anti",
+    ).select("__rk", "__ord", "__path", "__depth")
 
 
 def _map_path_field(leaves, cat, field: str):
@@ -1334,7 +1067,7 @@ def _map_path_field(leaves, cat, field: str):
     return mapped
 
 
-def _frontier_tables(fr, col="__node", cap=32) -> list[str]:
+def _frontier_tables(fr, col="__node", cap=_LINK_TABLE_CAP) -> list[str]:
     """Distinct record-id tables present in a frontier column (a
     bounded-cardinality driver peek — tables, not rows)."""
     rows = fr.select(
@@ -1350,70 +1083,71 @@ def _frontier_tables(fr, col="__node", cap=32) -> list[str]:
     return tables
 
 
-def _link_hop(fr, cat, chain: list[str]):
-    """One record-link hop: join the nodes' tables and follow the field
-    chain; array-valued links (children) flatten with positional order.
-    Returns (frontier, was_scalar).  Frontier nodes may span SEVERAL
-    tables (mixed-table link trees — idiom/recursion_record_links.surql),
-    so the link side is the union of every frontier table's frame."""
+def _link_hop(keys, cat, chain: list[str]):
+    """A record-link step as ONE hop projection over every table the chain
+    can reach from the seeds: each table's link field (the field chain;
+    nested structs) from its ``id``.  The reachable tables are found once,
+    one driver peek per newly reached set of tables, under the
+    ``_frontier_tables`` cap (mixed-table link trees —
+    idiom/recursion_record_links.surql).  Array-valued links flatten with
+    positional order.  Returns ([projection], scalar)."""
     from pyspark.sql.types import ArrayType
 
-    parts = []
-    any_array = False
-    for tbl in _frontier_tables(fr):
-        try:
-            t = cat.table(tbl)
-        except Exception:
-            continue
-        if chain[0] not in t.columns or "id" not in t.columns:
-            continue
-        c = F.col(chain[0])
-        for f_ in chain[1:]:
-            c = c.getField(f_)
-        part = t.select(F.col("id").alias("__lid"), c.alias("__lv"))
-        arr = isinstance(part.schema["__lv"].dataType, ArrayType)
-        any_array = any_array or arr
-        parts.append((part, arr))
-    if not parts:
-        return fr.limit(0), True
-    is_array = any_array
+    parts: dict = {}
+    new = _frontier_tables(keys, col="start")
+    while new:
+        peek = []
+        for tbl in new:
+            parts[tbl] = None
+            try:
+                t = cat.table(tbl)
+            except Exception:
+                continue
+            if chain[0] not in t.columns or "id" not in t.columns:
+                continue
+            c = F.col(chain[0])
+            for f_ in chain[1:]:
+                c = c.getField(f_)
+            part = t.select(F.col("id").alias("__here"), c.alias("__lv"))
+            arr = isinstance(part.schema["__lv"].dataType, ArrayType)
+            parts[tbl] = (part, arr)
+            lv = F.col("__lv").cast("array<string>" if arr else "string")
+            peek.append(part.select((F.explode(lv) if arr else lv).alias("__node")))
+        if not peek:
+            break
+        new = [t for t in _frontier_tables(reduce(DataFrame.unionByName, peek))
+               if t not in parts]
+        if len(parts) + len(new) > _LINK_TABLE_CAP:
+            raise ValueError(
+                f"record links span more than {_LINK_TABLE_CAP} distinct tables; "
+                "refusing to truncate traversal branches")
+    frames = [p for p in parts.values() if p is not None]
+    if not frames:
+        return [local_frame(keys.sparkSession, [], _HOP)], True
+    is_array = any(arr for _, arr in frames)
     norm = []
-    for part, arr in parts:
-        if any_array and not arr:
-            part = part.select(
-                "__lid", F.when(F.col("__lv").isNotNull(),
-                                F.array(F.col("__lv").cast("string")))
-                .alias("__lv"))
-        elif any_array:
-            part = part.select("__lid",
-                               F.col("__lv").cast("array<string>")
-                               .alias("__lv"))
+    for part, arr in frames:
+        lv = F.col("__lv")
+        if not is_array:
+            lv = lv.cast("string")
+        elif arr:
+            lv = lv.cast("array<string>")
         else:
-            part = part.select("__lid",
-                               F.col("__lv").cast("string").alias("__lv"))
-        norm.append(part)
-    tgt = norm[0]
-    for p2 in norm[1:]:
-        tgt = tgt.unionByName(p2)
-    joined = fr.join(tgt, fr["__node"] == tgt["__lid"]).drop("__lid")
+            lv = F.when(lv.isNotNull(), F.array(lv.cast("string")))
+        norm.append(part.select("__here", lv.alias("__lv")))
+    tgt = reduce(DataFrame.unionByName, norm)
     if is_array:
-        joined = joined.select(
-            *[c2 for c2 in joined.columns if c2 != "__lv"],
-            F.posexplode(F.col("__lv")).alias("__lp", "__lv"))
+        tgt = tgt.select("__here", F.posexplode("__lv").alias("__lp", "__there"))
         piece = F.lpad(F.col("__lp").cast("string"), 8, "0")
     else:
-        piece = _kv_key(F.col("__lv"))
-    joined = joined.filter(F.col("__lv").isNotNull())
-    out = joined.select(
-        "__rk", "__seed", F.col("__lv").alias("__node"),
-        F.concat(F.col("__ord"), F.lit(SEP), piece).alias("__ord"),
-        F.array_append(F.col("__path"), F.col("__lv")).alias("__path"),
-    )
-    return out, not is_array
+        tgt = tgt.withColumnRenamed("__lv", "__there")
+        piece = _kv_key(F.col("__there"))
+    tgt = tgt.filter(F.col("__there").isNotNull())
+    return [tgt.select("__here", "__there", piece.alias("__piece"))], not is_array
 
 
-def _nest_nodes(df, cat, slot, rows, steps, trailing, sort_by_depth):
-    """Group per-source node rows back into an ordered array column.
+def _nest_nodes(rks, cat, slot, rows, steps, trailing, sort_by_depth):
+    """Group per-source node rows into an ordered array per row key.
     ``trailing`` is None, ("field", f), or ("destructure", entries) —
     applied to the reached records (a target-table join)."""
     order = [F.col("__depth").alias("d"), F.col("__ord").alias("o")] \
@@ -1463,6 +1197,6 @@ def _nest_nodes(df, cat, slot, rows, steps, trailing, sort_by_depth):
         .agg(F.transform(F.array_sort(F.collect_list("__s")),
                          lambda x: x["v"]).alias(slot))
     )
-    out = df.join(agg, df["id"] == agg["__rk"], "left").drop("__rk")
+    out = rks.join(agg, "__rk", "left")
     empty = F.array().cast(dict(agg.dtypes).get(slot, "array<string>"))
     return out.withColumn(slot, F.coalesce(F.col(slot), empty))

@@ -4174,12 +4174,13 @@ def _is_recurse_path(expr) -> bool:
 def _attach_recurse_fields(df: DataFrame, cat: Catalog, fields,
                            params: dict | None = None) -> DataFrame:
     """`recv.{min..max}[+instr](->edge->tbl)[.field]` projections →
-    iterative level-wise traversal (operators/lookup.py recurse_value;
-    reference exec/operators/recursion.rs).  The receiver may be the row's
-    id column, `@`, or a record-id literal."""
+    operators/lookup.py recurse_value, which runs on graph._traverse's
+    one plan choice (reference exec/operators/recursion.rs).  The receiver
+    may be the row's id column, `@`, or a record-id literal."""
     from surrealdb_spark.operators import lookup as LK
 
     params = params or {}
+    rows = df  # every field's answer keys off the rows, not earlier fields
     for fld in fields:
         base, parts = fld.expr[1], fld.expr[2]
         parts = _norm_recurse_parts(list(parts))
@@ -4197,8 +4198,9 @@ def _attach_recurse_fields(df: DataFrame, cat: Catalog, fields,
         if trailing:
             raise ValueError("unsupported parts after a recursion")
         name = fld.alias or "recurse"
-        df = LK.recurse_value(df, cat, name, base, (lo, hi), instr, steps,
-                              tspec, params, compile_expr)
+        ans = LK.recurse_value(rows, cat, name, base, (lo, hi), instr, steps,
+                               tspec, params, compile_expr)
+        df = df.join(ans, df["id"] == ans["__rk"], "left").drop("__rk")
     return df
 
 

@@ -603,7 +603,7 @@ _SQL_DOCWORDS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x ->
 def surql_recurse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `.{min..max}(->edge->tbl)` recursion in SurrealQL text (syn/parser/
     # idiom.rs parse_recurse_part → exec/operators/recursion.rs), lowered
-    # to the level-wise BFS of operators/lookup.py.  Default (no
+    # to lookup.recurse_value on graph._traverse.  Default (no
     # instruction) semantics = the frontier at the FINAL depth, matching
     # the reference's golden corpus (graph/depth_range.surql) — here the
     # single 5th-halving ancestor per start.

@@ -1,8 +1,9 @@
 """Direction variants + range values — paths the suite oracles don't hit.
 
-The recursion tests run on both traversal plans: ``local`` (the one-job
-in-process expansion every fixture-sized graph takes) and ``distributed``
-(the per-level round loop, forced by dropping the edge budget to 0).
+The recursion tests run on both traversal plans through the ``plan``
+fixture (tests/conftest.py): ``local`` (the one-job in-process expansion
+every fixture-sized graph takes) and ``distributed`` (the per-level round
+loop, forced by dropping the edge budget to 0).
 """
 
 from __future__ import annotations
@@ -16,17 +17,10 @@ from pyspark.sql import functions as F
 from surrealdb_spark import suite
 from surrealdb_spark.dml import Database
 from surrealdb_spark.expr.operators import range_contains, range_struct
-from surrealdb_spark.operators import graph
+from surrealdb_spark.operators import lookup
 from surrealdb_spark.operators.graph import graph_hop, recurse, recurse_paths
 from surrealdb_spark.sql.statements import StatementRunner
 from surrealdb_spark.testing import compare_frames, duckdb_run
-
-
-@pytest.fixture(params=["local", "distributed"])
-def plan(request, monkeypatch):
-    if request.param == "distributed":
-        monkeypatch.setattr(graph, "LOCAL_EDGE_MAX_ROWS", 0)
-    return request.param
 
 
 def _edges(spark):
@@ -79,6 +73,74 @@ def test_duplicate_starts(spark, plan):
 def test_recursion_oracles(spark, sf_dir, plan, name):
     got = suite.all_queries()[name](spark, sf_dir).toPandas()
     compare_frames(name, got, duckdb_run(suite.all_oracles()[name], sf_dir))
+
+
+CHAIN = 300
+
+
+@pytest.fixture(scope="module")
+def chain(spark, tmp_path_factory):
+    """n:0 -> n:1 -> ... -> n:300 as `nxt` edges and as `parent` links, and
+    the cycle c:1 <-> c:2 as `cyc` edges and as `parent` links."""
+    r = StatementRunner(spark, Database(spark, str(tmp_path_factory.mktemp("chain"))))
+    r.run("INSERT INTO n [" + ", ".join(
+        f"{{id: n:{i}, parent: n:{i + 1}}}" for i in range(CHAIN)) + f", {{id: n:{CHAIN}}}]")
+    r.run("INSERT RELATION INTO nxt [" + ", ".join(
+        f"{{id: nxt:{i}, in: n:{i}, out: n:{i + 1}}}" for i in range(CHAIN)) + "]")
+    r.run("INSERT INTO c [{id: c:1, parent: c:2}, {id: c:2, parent: c:1}]")
+    r.run("INSERT RELATION INTO cyc [{id: cyc:1, in: c:1, out: c:2}, {id: cyc:2, in: c:2, out: c:1}]")
+    return r
+
+
+@pytest.fixture
+def cap(plan, monkeypatch):
+    """The recursion limit the chain overruns: the reference's 256 on the
+    local plan.  The distributed plan runs a round of Spark jobs per level
+    (~0.2 s each), so there it is lowered to 12: the same code path, and
+    the same 300-node chain still overruns it."""
+    if plan == "distributed":
+        monkeypatch.setattr(lookup, "RECURSION_LIMIT", 12)
+    return lookup.RECURSION_LIMIT
+
+
+@pytest.mark.parametrize("step", ["(->nxt->n)", ".parent"])
+def test_unbounded_recursion_limit(chain, cap, step):
+    """`{..}` past the limit raises for edge steps as for link steps."""
+    with pytest.raises(Exception, match=re.escape(f"Exceeded the idiom recursion limit of {cap}.")):
+        chain.run(f"SELECT id, id.{{..}}{step} AS a FROM n:0").collect()
+
+
+def test_unbounded_collect_stops_at_limit(chain, cap):
+    got = chain.run("SELECT id, id.{..+collect}(->nxt->n) AS a FROM n:0").collect()
+    assert got[0].a == [f"n:{i}" for i in range(1, cap + 1)]
+
+
+@pytest.mark.parametrize("step, alone", [("(->cyc->c)", ["c:2"]), (".parent", "c:2")])
+def test_cycle_under_timeout(chain, plan, step, alone):
+    """Plain `{..}` around a cycle raises the TIMEOUT error; without a
+    TIMEOUT the cycle rule ends the path."""
+    with pytest.raises(Exception, match="exceeded the timeout"):
+        chain.run(f"SELECT id, id.{{..}}{step} AS a FROM c:1 TIMEOUT 5s").collect()
+    assert chain.run(f"SELECT id, id.{{..}}{step} AS a FROM c:1").collect()[0].a == alone
+
+
+def test_rows_answer_alone(chain, plan):
+    """Each row of a multi-root SELECT gets its single-root answer."""
+    q = ("SELECT id, id.{1..5}(->nxt->n) AS last, id.{1..5+collect}(->nxt->n) AS col, "
+         "id.{1..5+path}(->nxt->n) AS path FROM n:0, n:298")
+    got = {r.id: (r.last, r.col, r.path) for r in chain.run(q).collect()}
+    first5 = [f"n:{i}" for i in range(1, 6)]
+    assert got == {"n:0": (["n:5"], first5, [first5]),
+                   "n:298": (["n:300"], ["n:299", "n:300"], [["n:299", "n:300"]])}
+    # neither row reaches n:3 within 3 hops: each gets its own frontier paths
+    q = "SELECT id, id.{..3+shortest=n:3}(->nxt->n) AS s FROM n:297, n:298"
+    got = {r.id: r.s for r in chain.run(q).collect()}
+    assert got == {"n:297": [["n:298", "n:299", "n:300"]], "n:298": [["n:299", "n:300"]]}
+    # a column holds one type: next to a row that reaches the target (a flat
+    # path), a row that does not is NONE instead of its nested frontier paths
+    q = "SELECT id, id.{..3+shortest=n:3}(->nxt->n) AS s FROM n:0, n:298"
+    got = {r.id: r.s for r in chain.run(q).collect()}
+    assert got == {"n:0": ["n:1", "n:2", "n:3"], "n:298": None}
 
 
 def test_range_values(spark):
