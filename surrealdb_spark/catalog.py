@@ -80,6 +80,9 @@ class ScanCache:
 
 SCANS = ScanCache()
 
+# stamp of a frame pinned for the rest of a statement (`Catalog.pin`)
+_PINNED = object()
+
 
 class Catalog:
     """Lazy table loader + temp-view registrar for one scale-factor dir."""
@@ -108,12 +111,35 @@ class Catalog:
         # from `self.auth` (set_auth).
         self.permissions: dict[str, object] = {}
         self.auth: dict = {}
+        # Database-backed names resolve when a statement reads them (the
+        # reference's plan_sources): a StatementRunner installs
+        # `resolver(name) -> (stamp, build) | None` and `edge_tables()`.
+        # A built frame serves its name while its stamp holds, until the
+        # next statement starts (`new_statement`).
+        self.resolver: Callable[[str], tuple | None] | None = None
+        self.edge_tables: Callable[[], set[str]] = set
+        self._frames: dict[str, tuple] = {}
+        # names served by the resolver or `register` (OLTP-scoped, unlike
+        # sf-dir parquet scans): LIMIT without ORDER BY pins KV id order
+        # only here (a global sort per bare LIMIT would be wrong at 100 TB)
+        self.registered: set[str] = set()
+        # HNSW indexes: (table, field) → (DIST, vector TYPE), set by
+        # DEFINE/REMOVE INDEX; `<|k, ef|>` searches read them
+        self.hnsw: dict[tuple[str, str], tuple[str, str]] = {}
 
     def path(self, name: str) -> str:
         return f"{self.sf_dir}/{name}.parquet"
 
     def table(self, name: str) -> DataFrame:
         """TableScan: full scan of a table; Catalyst prunes columns/rows."""
+        hit = self.resolver(name) if self.resolver is not None else None
+        if hit is not None:
+            stamp, build = hit
+            ent = self._frames.get(name)
+            if ent is None or ent[0] is not _PINNED and ent[0] != stamp:
+                ent = self._frames[name] = (stamp, build())
+                self.registered.add(name)
+            return ent[1]
         if name not in self._cache:
             if name in TABLES:
                 path = self.path(name)
@@ -233,15 +259,33 @@ class Catalog:
         raise AttributeError(name)
 
     def register(self, name: str, df: DataFrame) -> None:
-        """Register a DataFrame as a named table (DML-created tables,
-        views, subquery results) resolvable in FROM clauses."""
+        """Serve a caller-built DataFrame as table ``name`` in FROM
+        clauses.  Database names need no registration: they resolve when
+        a statement reads them (`resolver`), and take precedence."""
         self._cache[name] = df
-        # OLTP-scoped (db-written) tables, as opposed to lazy sf-dir
-        # parquet scans — LIMIT-without-ORDER pins KV id order only here
-        # (a global sort per bare LIMIT would be wrong at 100 TB)
-        if not hasattr(self, "registered"):
-            self.registered = set()
         self.registered.add(name)
+
+    def new_statement(self) -> None:
+        """Forget the frames built for the last statement: a definition
+        (DEFINE FIELD, DEFINE TABLE … AS) may have changed since."""
+        self._frames.clear()
+
+    def pin(self, name: str, df: DataFrame) -> None:
+        """Serve ``df`` for ``name`` until the statement ends (SELECT …
+        VERSION reads a table's snapshot)."""
+        self._frames[name] = (_PINNED, df)
+        self.registered.add(name)
+
+    def forget(self, name: str) -> None:
+        """Drop everything held for ``name`` (REMOVE TABLE, rollback)."""
+        self._cache.pop(name, None)
+        self._frames.pop(name, None)
+        self.registered.discard(name)
+
+    def edge_names(self) -> set[str]:
+        """Tables a `?` wildcard lookup may walk: registered edge frames
+        plus the resolver's RELATE-shaped tables (in/out columns)."""
+        return set(self.edges) | self.edge_tables()
 
     def register_edges(self, name: str, edges: DataFrame) -> None:
         """Register an edge table (columns ``in``/``out`` [+payload])."""

@@ -84,8 +84,10 @@ class TableDef:
     # version_scope.rs).  Off by default: full-copy snapshots are only
     # sane for modest tables; the scale path is Delta/Iceberg time travel.
     versioned: bool = False
-    # DEFINE EVENT hooks: fn(action, df_of_affected_rows) — core/src/doc/event.rs
-    events: list[Callable[[str, DataFrame], None]] = field(default_factory=list)
+    # DEFINE EVENT hooks: fn(action, affected rows, before-image or None)
+    # — core/src/doc/event.rs
+    events: list[Callable[[str, DataFrame, DataFrame | None], None]] = field(
+        default_factory=list)
     # DEFINE INDEX ... UNIQUE: each entry is the column list of one unique
     # index, enforced on CREATE/INSERT/UPSERT (catalog/schema/index.rs Uniq)
     unique_indexes: list[list[str]] = field(default_factory=list)
@@ -140,8 +142,8 @@ class Database:
         left by a killed process is never read.  The initial ``data`` dir
         takes in-place appends (CREATE / INSERT into an unchanged schema).
 
-        The dir plus its parquet files' (name, size, mtime_ns) are the key
-        `table` caches the resolved scan under (`catalog.ScanCache`)."""
+        The dir plus its parquet files' (name, size, mtime_ns) are the
+        table's `stamp`."""
         base = f"{self.root}/{tbl}"
         for n in sorted(self._generations(tbl), reverse=True):
             gen = f"{base}/data_g{n}"
@@ -195,6 +197,19 @@ class Database:
                 return self.spark.read.parquet(f"{vdir}/{later[0]}")
         return self.table(tbl)
 
+    def stamp(self, tbl: str) -> tuple:
+        """``(generation dir, parquet files' (name, size, mtime_ns))``:
+        equal stamps mean the same table state.  Sound because:
+
+        * Spark part-file names carry a per-write UUID, so an in-place
+          append (`_append`) changes the stamp;
+        * every other rewrite lands in a fresh ``data_g<N>`` dir;
+        * a transaction restore (copytree) keeps names, sizes and mtimes,
+          so an equal stamp means byte-identical files at the same
+          paths."""
+        path = self._data(tbl)
+        return path, self._parquet_files(path)
+
     def table(self, tbl: str) -> DataFrame:
         """The table's current generation as a lazy DataFrame.
 
@@ -202,22 +217,11 @@ class Database:
         unchanged, so statements that re-read a table skip Spark's file
         listing and schema resolution; a new generation resolves once,
         from a footer read on the driver (`_read`).  Cached (via the shared
-        `catalog.SCANS`, one entry per table) under `_data(tbl)` plus the
-        (name, size, mtime_ns) of its parquet files, which is sound
-        because:
-
-        * Spark part-file names carry a per-write UUID, so an in-place
-          append (`_append`) or view rewrite changes the key;
-        * every other rewrite lands in a fresh ``data_g<N>`` dir;
-        * a transaction restore (copytree) keeps names, sizes and mtimes,
-          so an equal key means a frame over byte-identical files at the
-          same paths.
-
+        `catalog.SCANS`, one entry per table) under the table's `stamp`.
         The entry holds the schema and file index only, never rows."""
         from surrealdb_spark.catalog import SCANS
 
-        path = self._data(tbl)
-        files = self._parquet_files(path)
+        path, files = self.stamp(tbl)
         if not files:
             raise MutationError(f"table {tbl} is empty — no schema to read")
         return SCANS.get(self.spark, f"{self.root}/{tbl}", (path, files),
@@ -450,13 +454,7 @@ class Database:
                 )
             change.write.mode("append").parquet(self._changes(tbl))
         for hook in td.events:
-            # 3-arg hooks (incremental views) also see the pre-image
-            import inspect
-
-            if len(inspect.signature(hook).parameters) >= 3:
-                hook(action, rows, before)
-            else:
-                hook(action, rows)
+            hook(action, rows, before)
 
     # -- statements ----------------------------------------------------------
 
@@ -922,34 +920,3 @@ def apply_patch(doc: dict, ops: list[dict]) -> dict:
         else:
             out[key] = op["value"]
     return out
-
-
-class ViewDef:
-    """DEFINE TABLE <name> AS SELECT — materialized/aggregated views
-    (core/src/catalog/view.rs:12-36: Materialized / Aggregated / Select).
-
-    ``builder`` maps the source table's DataFrame to the view's content.
-    Maintenance is hooked into every mutation via Database.define_view
-    (the analogue of process_table_views, core/src/doc/table.rs): batch
-    recompute-on-write — the documented Spark strategy for the Aggregated
-    flavor at this stage (incremental delta-merge arrives with streaming
-    aggregation over the changefeed; SURVEY §2.4).
-    """
-
-    def __init__(self, name: str, source: str, builder: Callable[[DataFrame], DataFrame]):
-        self.name = name
-        self.source = source
-        self.builder = builder
-
-
-def define_view(db: Database, view: ViewDef) -> None:
-    """Register the view and hook recompute into the source's mutations."""
-    db.define_table(TableDef(view.name, id_col="id"))
-
-    def maintain(_action: str, _rows: DataFrame) -> None:
-        content = view.builder(db.table(view.source)).localCheckpoint(eager=True)
-        content.write.mode("overwrite").parquet(db._data(view.name))
-
-    db.tables[view.source].events.append(maintain)
-    if db._exists(view.source):
-        maintain("CREATE", db.table(view.source))

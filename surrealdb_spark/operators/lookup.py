@@ -56,18 +56,10 @@ def _kv_key(c: Column) -> Column:
     ).otherwise(F.concat(F.lit("\x03"), k))
 
 
-def edge_table_names(cat) -> list[str]:
-    """Candidate edge tables for a `?` wildcard segment: RELATE-shaped
-    tables (in/out record-id columns — doc/relate.rs edge shape)."""
-    names = set(getattr(cat, "edge_names", ()) or ())
-    names |= set(getattr(cat, "edges", {}) or {})
-    return sorted(names)
-
-
 def edge_df(cat, name: str) -> DataFrame | None:
     """Resolve an edge table by name; None when it isn't RELATE-shaped."""
     df = None
-    if name in getattr(cat, "edges", {}):
+    if name in cat.edges:
         df = cat.edges[name]
     else:
         try:
@@ -186,7 +178,7 @@ def _edge_segment(fr, cat, dirn, tables, opts, params, want_row,
     """One node→edges hop: equi-join frontier against the edge table(s)."""
     fr = fr.drop(*[c for c in fr.columns if c.startswith("__c_")])
     dirs = [("in", "0"), ("out", "1")] if dirn == "both" else [(dirn, "")]
-    names = tables if tables is not None else edge_table_names(cat)
+    names = tables if tables is not None else sorted(cat.edge_names())
     hops = []
     carry_cols: list[str] | None = None
     parent_where = _has_parent(opts.get("where"))

@@ -2476,14 +2476,14 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
         # row-level SELECT permission: a plain filter BEFORE user clauses,
         # so Catalyst pushes it into the scan like any predicate
         # (exec/permission.rs; schema/mod.rs:42-47)
-        perm = getattr(cat, "permissions", {}).get(src)
+        perm = cat.permissions.get(src)
         if perm is not None:
             if perm is False:
                 t = t.filter(F.lit(False))
             else:
                 from surrealdb_spark.operators.misc import with_permissions
 
-                t = with_permissions(t, perm, getattr(cat, "auth", {}))
+                t = with_permissions(t, perm, cat.auth)
         return t
 
     def _records_from_ids(vdf: DataFrame, resolve) -> DataFrame | None:
@@ -2830,14 +2830,12 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
             # vectors are stored at the index TYPE (F32 default —
             # schema/index.rs VectorType), so sums accumulate in f32
             mname = "euclidean"
-            hd = getattr(cat, "hnsw_dist", {})
-            hv = getattr(cat, "hnsw_vtype", {})
             if isinstance(lhs_ast, tuple) and lhs_ast[0] == "ident":
-                for (tb0, f0), mm in hd.items():
+                for (tb0, f0), (mm, vtype) in cat.hnsw.items():
                     if f0 == lhs_ast[1] and (
                             not sel.sources or tb0 in sel.sources):
                         mname = mm
-                        use_f32 = hv.get((tb0, f0), "F32") != "F64"
+                        use_f32 = vtype != "F64"
                         break
         f32 = {
             "cosine": V.cosine_distance_f32,
@@ -2998,7 +2996,7 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
                     return s[1]
                 return None
 
-            perms = getattr(cat, "permissions", {})
+            perms = cat.permissions
             denied = sel.sources and all(
                 _src_tbl(s) is not None
                 and perms.get(_src_tbl(s)) is False for s in sel.sources)
@@ -3101,7 +3099,7 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
     # dynamic scans page in id order too) get the KV-order sort; a
     # subquery source keeps its own (possibly ORDER BY'd) row order
     oltp_srcs = bool(str_srcs) and all(
-        s in getattr(cat, "registered", ()) for s in str_srcs)
+        s in cat.registered for s in str_srcs)
     if (sel.start or oltp_srcs) and not sel.order and not is_grouped \
             and "id" in df.columns and "__present" in df.columns:
         # rows come out in KV key order — the reference's table scan is

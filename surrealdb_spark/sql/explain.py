@@ -1021,7 +1021,6 @@ def _counter(runner, tbl, params):
 
     def cnt(pred, limit, offset):
         try:
-            runner._refresh_catalog()
             if pred is not None and isinstance(pred, tuple) \
                     and pred[0] == "matchpred":
                 sel2 = _mk_matches_select(runner, tbl, pred[1])
@@ -1310,7 +1309,6 @@ def plan_new(runner, sel, params=None) -> Node:
             try:
                 import dataclasses as _dc
 
-                runner._refresh_catalog()
                 base = _dc.replace(sel, order=[], limit=None, start=None,
                                    fields=None, value_expr=None, group=None,
                                    fetch=[], split=[], explain=None)

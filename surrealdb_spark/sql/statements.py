@@ -106,9 +106,10 @@ class DefineTableStmt:
     select_perm: object = "full"
     comment: str | None = None
     verb_perms: dict | None = None  # verb → canonical NONE/FULL/WHERE text
-    # `AS SELECT ...` materialized-view definition (Select AST + raw text);
-    # registered as a recompute-on-read view (catalog/aggregation.rs keeps
-    # these incrementally — views.py is the at-scale incremental path)
+    # `AS SELECT ...` view definition (Select AST + raw text): the view
+    # reads as its SELECT over the sources' current state, built when a
+    # statement reads it (the reference keeps these incrementally,
+    # catalog/aggregation.rs — same read results)
     as_select: object = None
     as_text: str | None = None
     _type_set: bool = False  # explicit TYPE clause seen
@@ -2538,8 +2539,9 @@ def _bounded_collect(df: DataFrame, what: str, cap: int = _OLTP_CAP) -> list:
 class StatementRunner:
     """Executes parsed statements against a Database + Catalog pair.
 
-    SELECTs read through the catalog (DML-created tables are registered on
-    it); mutations lower to dml.Database batch jobs.
+    SELECTs read through the catalog, which asks the runner for database
+    names on a miss (`_resolve_table`); mutations lower to dml.Database
+    batch jobs.
     """
 
     def __init__(self, spark: SparkSession, db: Database,
@@ -2588,10 +2590,13 @@ class StatementRunner:
         # (computed/typed.surql)
         self.computed_kinds: dict[tuple[str, str], str] = {}
         # DEFINE TABLE v AS SELECT — view name → (Select AST, raw text);
-        # recomputed at read in _refresh_catalog (the reference maintains
-        # these incrementally per mutation, catalog/aggregation.rs — same
-        # read results; views.py is the incremental 100 TB engine)
+        # built when a statement reads the view (`_resolve_table`)
         self.view_defs: dict[str, tuple] = {}
+        # tables whose COMPUTED fields are being attached: a body that
+        # reads its own table sees the stored rows (`_with_computed`)
+        self._computing: set[str] = set()
+        self.catalog.resolver = self._resolve_table
+        self.catalog.edge_tables = self._edge_tables
         # DEFINE NAMESPACE/DATABASE registry + STRICT mode: when the active
         # database was DEFINEd STRICT, tables must be DEFINEd before use
         # (core strict-mode checks in doc/{create,select}.rs).
@@ -2784,8 +2789,7 @@ class StatementRunner:
             for tb in [t for t in self.db.tables if t not in pre]:
                 self.db.tables.pop(tb, None)
                 self.meta.get("tables", {}).pop(tb, None)
-                self.catalog._cache.pop(tb, None)
-                getattr(self.catalog, "registered", set()).discard(tb)
+                self.catalog.forget(tb)
         self._tx_backup = None
 
     @staticmethod
@@ -2798,6 +2802,7 @@ class StatementRunner:
     def _run_main(self, text: str, params: dict | None = None) -> DataFrame | None:
         from surrealdb_spark.sql.compiler import compile_select
 
+        self.catalog.new_statement()
         txt = text.strip().rstrip(";").strip()
         import re as _re0
 
@@ -2828,7 +2833,6 @@ class StatementRunner:
             if rest.upper().startswith("SELECT"):
                 from surrealdb_spark.sql.parser import parse_select as _ps
 
-                self._refresh_catalog()
                 node = plan_new(self, _ps(rest), merged0)
             else:
                 node = plan_value(self, rest, merged0, analyze=analyze0)
@@ -2941,11 +2945,10 @@ class StatementRunner:
         if self.strict:
             for src in stmt.sources or []:
                 self._check_strict(src if isinstance(src, str) else None)
-        self._refresh_catalog()
         stmt, params = self._rewrite_search(stmt, params)
         if stmt.version is not None:
-            # VERSION clause: re-register db-backed sources as their
-            # snapshot state at that instant (version_scope.rs:25)
+            # VERSION clause: db-backed sources read as their snapshot
+            # state at that instant, for this statement (version_scope.rs:25)
             v = self.spark.range(1).select(
                 self._expr(stmt.version, params).alias("v")
             ).first()["v"]
@@ -2959,7 +2962,7 @@ class StatementRunner:
                 ms = int(v)
             for tbl in stmt.sources:
                 if tbl in self.db.tables and self.db._exists(tbl):
-                    self.catalog.register(tbl, self.db.table_at(tbl, ms))
+                    self.catalog.pin(tbl, self.db.table_at(tbl, ms))
         nested = self._nested_graph_projection(stmt, params)
         if nested is not None:
             return nested
@@ -3271,7 +3274,6 @@ class StatementRunner:
             # join-based lookup engine (operators/lookup.py)
             from surrealdb_spark.sql.compiler import eval_lookup_value
 
-            self._refresh_catalog()
             return eval_lookup_value(self.spark, self.catalog, ast, binds)
         if ast[0] == "refscan_on":
             return self._refscan_on(ast, binds)
@@ -3447,18 +3449,28 @@ class StatementRunner:
         return cands[0]["field"] if cands else None
 
     def _with_computed(self, tbl: str, df: DataFrame) -> DataFrame:
-        """Attach COMPUTED `<~` reverse-reference columns at read time
-        (scan/reference.rs): one groupBy per referencing side, sorted
-        collected ids, left join on this table's id."""
+        """Attach COMPUTED columns at read time: `<~` reverse references
+        (scan/reference.rs: one groupBy per referencing side, sorted
+        collected ids, left join on this table's id) and expression
+        bodies."""
         specs = self.computed_fields.get(tbl, {})
+        if tbl in self._computing:
+            # a body that reads its own table resolves it again from in
+            # here: that read gets the stored rows, or the body would
+            # never finish (test_views_computed::test_computed_self_reference)
+            return self._attach_computed(tbl, df, {
+                f: sp for f, sp in specs.items() if sp[0] == "refs"})
+        self._computing.add(tbl)
+        try:
+            return self._attach_computed(tbl, df, specs)
+        finally:
+            self._computing.discard(tbl)
+
+    def _attach_computed(self, tbl: str, df: DataFrame,
+                         specs: dict) -> DataFrame:
         for fname, (kind, payload) in specs.items():
             if kind == "refs":
                 df = self._attach_refs(df, tbl, payload, fname)
-            elif getattr(self, "_fold_busy", False):
-                # re-entrant catalog refresh from inside a computed-body
-                # subquery evaluation: skip generic computed attachment
-                # (the in-flight fold would recurse forever otherwise)
-                continue
             else:  # generic COMPUTED expr over the row's own columns
                 from surrealdb_spark.sql.compiler import (_has_lookup,
                                                           compile_expr,
@@ -3514,27 +3526,10 @@ class StatementRunner:
                                                   _extract_lookups,
                                                   compile_expr, types_of)
 
-        # the runner catalog may be mid-refresh/stale here (write paths,
-        # catalog materialization): overlay CURRENT db frames so the edge
-        # scan sees just-written edges, without disturbing the live
-        # catalog's registrations
-        import copy as _copy
-
-        cat = _copy.copy(self.catalog)
-        cat._cache = dict(getattr(self.catalog, "_cache", {}))
-        edge_names = set(getattr(self.catalog, "edge_names", ()) or ())
-        for name in self.db.tables:
-            if self.db._exists(name):
-                t = self.db.table(name)
-                cat._cache[name] = t
-                if "in" in t.columns and "out" in t.columns:
-                    edge_names.add(name)
-        cat.edge_names = edge_names
-
         before_cols = list(df.columns)
         specs: list = []
         new = _extract_lookups(ast, specs)
-        at = _attach_lookup_specs(self.spark, df, cat, specs,
+        at = _attach_lookup_specs(self.spark, df, self.catalog, specs,
                                   dict(self.params_defined))
         col = compile_expr(new, dict(self.params_defined), types_of(at))
         out = at.withColumn(fname, col)
@@ -3595,9 +3590,6 @@ class StatementRunner:
                     out.append(x)
             return tuple(out), ok
 
-        if getattr(self, "_fold_busy", False):
-            return False, None
-        self._fold_busy = True
         try:
             node, ok = subst(payload)
             if not ok:
@@ -3605,8 +3597,6 @@ class StatementRunner:
             return True, _pyf.peval(node, {})
         except Exception:
             return False, None
-        finally:
-            self._fold_busy = False
 
     def _purge_edges(self, tbl: str, doomed: DataFrame | None) -> None:
         """doc/purge.rs: deleting records removes the edges whose in/out
@@ -4001,7 +3991,6 @@ class StatementRunner:
         predicate pushdown subsumes the index scans)."""
         from surrealdb_spark.sql.explain import plan_legacy
 
-        self._refresh_catalog()
         if "all-ro" in getattr(self, "planner_strategy", ()):
             # the new planner rewrites `SELECT ... EXPLAIN` to
             # `EXPLAIN FORMAT JSON SELECT ...` (and EXPLAIN FULL to the
@@ -4062,7 +4051,7 @@ class StatementRunner:
                     f"{', '.join(deps)} are defined from it")
             del self.db.tables[name]
             self.view_defs.pop(name, None)
-            self.catalog._cache.pop(name, None)
+            self.catalog.forget(name)
             import shutil
 
             # the table's rows, indexes and field meta go with it —
@@ -4072,6 +4061,7 @@ class StatementRunner:
                         if d.table == name]:
                 self.index_defs.pop(ixn, None)
                 self.indexes.pop(ixn, None)
+            self._sync_hnsw()
             self.table_meta.pop(name, None)
             self.obj_info["tables"].pop(name, None)
             # field definitions go with the table: a later re-DEFINE FIELD
@@ -4112,6 +4102,7 @@ class StatementRunner:
         if k == "index":
             d = self.index_defs.pop(name)  # KeyError if absent
             self.indexes.pop(name, None)
+            self._sync_hnsw()
             if d.kind == "uniq":
                 td = self.db.tables.get(d.table)
                 if td and list(d.fields) in td.unique_indexes:
@@ -4862,53 +4853,66 @@ class StatementRunner:
 
         return sorted(ANALYZERS)
 
-    def _refresh_catalog(self) -> None:
-        # HNSW index metrics: `<|k, ef|>` searches use the INDEX's
-        # declared DIST (exec/operators/scan/knn.rs)
-        self.catalog.hnsw_dist = {
-            (d.table, str(d.fields[0]) if d.fields else ""):
-                (d.dist or "euclidean").lower()
+    def _resolve_table(self, name: str) -> tuple | None:
+        """Catalog miss on a database name → ``(stamp, build)``: a view's
+        SELECT over its sources' current state, a written table with its
+        COMPUTED fields, or a defined-but-empty table's declared fields.
+        A view or a COMPUTED body may read any table, so its stamp covers
+        every table's generation; the catalog rebuilds on a new stamp, so
+        a write inside a statement is seen."""
+        if name in self.view_defs:
+            vast = self.view_defs[name][0]
+
+            def view():
+                try:
+                    return self._view_frame(name, vast)
+                except Exception:
+                    # a view over a not-yet-existing source reads as empty
+                    return local_frame(self.spark, [], "id string")
+
+            return self._db_stamp(), view
+        if name not in self.db.tables:
+            return None
+        stamp = self.db.stamp(name)
+        if not stamp[1]:  # no parquet file written yet
+            return stamp, lambda: self._declared_frame(name)
+        if self.computed_fields.get(name):
+            stamp = (stamp, self._db_stamp())
+        return stamp, lambda: self._with_computed(name, self.db.table(name))
+
+    def _db_stamp(self) -> tuple:
+        return tuple(self.db.stamp(n) for n in self.db.tables)
+
+    def _declared_frame(self, name: str) -> DataFrame:
+        """A defined-but-empty table: zero rows with the DECLARED field
+        columns resolvable (schemafull tables have a schema before any
+        write — define/field.rs)."""
+        cols = ["id string"]
+        for fd in self.db.tables[name].fields:
+            if "." in fd.name or fd.name.endswith("*") or fd.name == "id":
+                continue
+            dt = fd.dtype if isinstance(fd.dtype, str) and \
+                "<" not in (fd.dtype or "") else None
+            cols.append(f"`{fd.name}` {dt or 'string'}")
+        return local_frame(self.spark, [], ", ".join(cols))
+
+    def _edge_tables(self) -> set[str]:
+        """RELATE-shaped tables (in/out columns — doc/relate.rs edge
+        shape): graph-lookup candidates for `?` wildcard segments."""
+        return {n for n in self.db.tables if self.db._exists(n)
+                and {"in", "out"} <= set(self.db.table(n).columns)}
+
+    def _sync_hnsw(self) -> None:
+        """HNSW index DIST and vector TYPE per (table, field) for
+        `<|k, ef|>` searches (exec/operators/scan/knn.rs).  F32 is the
+        default TYPE (schema/index.rs VectorType): distances accumulate
+        in f32 unless TYPE F64."""
+        self.catalog.hnsw = {
+            (d.table, str(d.fields[0]) if d.fields else ""): (
+                (d.dist or "euclidean").lower(),
+                (getattr(d, "vtype", None) or "F32").upper())
             for d in self.index_defs.values()
             if getattr(d, "kind", "") == "hnsw"}
-        # HNSW vector storage type: F32 is the DEFAULT (schema/index.rs
-        # VectorType) — distances accumulate in f32 unless TYPE F64
-        self.catalog.hnsw_vtype = {
-            (d.table, str(d.fields[0]) if d.fields else ""):
-                (getattr(d, "vtype", None) or "F32").upper()
-            for d in self.index_defs.values()
-            if getattr(d, "kind", "") == "hnsw"}
-        edge_names = set()
-        for name in self.db.tables:
-            if self.db._exists(name):
-                t = self._with_computed(name, self.db.table(name))
-                self.catalog.register(name, t)
-                if "in" in t.columns and "out" in t.columns:
-                    # RELATE-shaped table → graph-lookup candidate for `?`
-                    # wildcard segments (doc/relate.rs edge shape)
-                    edge_names.add(name)
-            else:
-                # defined-but-empty table: SELECTs see zero rows with the
-                # DECLARED field columns resolvable (schemafull tables
-                # have a schema before any write — define/field.rs)
-                cols = ["id string"]
-                for fd in self.db.tables[name].fields:
-                    if "." in fd.name or fd.name.endswith("*") \
-                            or fd.name == "id":
-                        continue
-                    dt = fd.dtype if isinstance(fd.dtype, str) and \
-                        "<" not in (fd.dtype or "") else None
-                    cols.append(f"`{fd.name}` {dt or 'string'}")
-                self.catalog.register(
-                    name, local_frame(self.spark, [], ", ".join(cols))
-                )
-        self.catalog.edge_names = edge_names
-        for vname, (vast, _vtext) in self.view_defs.items():
-            try:
-                self.catalog.register(vname, self._view_frame(vname, vast))
-            except Exception:
-                # a view over a not-yet-existing source reads as empty
-                self.catalog.register(
-                    vname, local_frame(self.spark, [], "id string"))
 
     def _view_frame(self, vname: str, vast) -> DataFrame:
         """`DEFINE TABLE v AS SELECT ...` read frame: the view's SELECT
@@ -4921,7 +4925,7 @@ class StatementRunner:
 
         for s in vast.sources:
             if isinstance(s, str) and s not in self.db.tables \
-                    and s not in self.catalog._cache \
+                    and s not in self.view_defs \
                     and not _os.path.exists(self.catalog.path(s)):
                 # view over a table that doesn't exist yet: no groups
                 # (incremental state starts empty, doc/table.rs)
@@ -4933,15 +4937,17 @@ class StatementRunner:
             # GROUP ALL view: the all-group row exists only once a source
             # row has contributed (incremental Group state — a view over
             # an empty/fully-filtered table has NO record, unlike a direct
-            # `GROUP ALL` select which emits `{count: 0}`)
+            # `GROUP ALL` select which emits `{count: 0}`).  The check is
+            # part of the plan: a cross join with at most one contributing
+            # row, projected to no columns
             import dataclasses as _dc
 
             probe = _dc.replace(vast, fields=None, value_expr=None,
                                 group=None, order=[], limit=1,
                                 fetch=[], omit=[])
-            if compile_select(self.spark, probe, catalog=self.catalog,
-                              params=self.params_defined).isEmpty():
-                df = df.limit(0)
+            df = df.crossJoin(compile_select(
+                self.spark, probe, catalog=self.catalog,
+                params=self.params_defined).select())
         if "id" in df.columns:
             return df
         key_names = []
@@ -5010,10 +5016,8 @@ class StatementRunner:
                                               if isinstance(s, str)}]
 
     def _view_rows(self, v: str) -> dict:
-        self._refresh_catalog()
-        vast, _t = self.view_defs[v]
         try:
-            rows = _bounded_collect(self._view_frame(v, vast),
+            rows = _bounded_collect(self.catalog.table(v),
                                     f"view event diff ({v})")
         except Exception:
             return {}
@@ -5559,6 +5563,7 @@ class StatementRunner:
                             raise ValueError(msg)
                         stmt.build_error = msg
             self.index_defs[stmt.name] = stmt
+            self._sync_hnsw()
             try:
                 stmt.initial_rows = (self.db.table(stmt.table).count()
                                      if self.db._exists(stmt.table) else 0)
@@ -5859,7 +5864,7 @@ class StatementRunner:
             when_ast, then_stmts = stmt.when, list(stmt.then)
             ev_name = stmt.name
 
-            def hook(action, df, before=None):
+            def hook(action, df, before):
                 self._fire_event(ev_name, action, df, before,
                                  when_ast, then_stmts)
 
@@ -6183,7 +6188,6 @@ class StatementRunner:
             if stmt.select is not None:
                 from surrealdb_spark.sql.compiler import compile_select
 
-                self._refresh_catalog()
                 df = compile_select(self.spark, stmt.select,
                                     catalog=self.catalog, params=params)
             else:
@@ -6248,7 +6252,6 @@ class StatementRunner:
 
                 sel = _Sel(fields=None, value_expr=None, sources=[tbl],
                            where=stmt.where, explain=stmt.explain)
-                self._refresh_catalog()
                 return plan_legacy(self, sel, params or {})
             if tbl not in self.db.tables:
                 # undefined table: UPSERT creates it; UPDATE is a no-op
@@ -6318,7 +6321,6 @@ class StatementRunner:
                 # tree format
                 from surrealdb_spark.sql.explain import plan_legacy
 
-                self._refresh_catalog()
                 return plan_legacy(self, sel, params or {})
             if tbl not in self.db.tables:
                 self.db.define_table(TableDef(tbl))  # no-op empty table

@@ -23,7 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from surrealdb_spark import get_spark
-from surrealdb_spark.dml import Database, TableDef, ViewDef, define_view
+from surrealdb_spark.dml import Database, TableDef
 from surrealdb_spark.sql.statements import StatementRunner
 
 
@@ -179,11 +179,11 @@ def test_reads_see_every_change(spark, tmp_path):
     r.run("REMOVE TABLE t")
     r.run("CREATE t:9 SET v = 9")
     assert _vs(r) == [9]
-    define_view(db, ViewDef("t_total", "t",
-                            lambda df: df.agg(F.sum("v").alias("total"))))
-    assert db.table("t_total").first().total == 9
+    r.run("DEFINE TABLE t_total AS SELECT math::sum(v) AS total FROM t "
+          "GROUP ALL")
+    assert r.run("SELECT total FROM t_total").first().total == 9
     db.create("t", spark.createDataFrame([("t:5", 5)], "id string, v bigint"))
-    assert db.table("t_total").first().total == 14
+    assert r.run("SELECT total FROM t_total").first().total == 14
     assert _vs(r) == [5, 9]
 
 

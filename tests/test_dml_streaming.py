@@ -101,7 +101,7 @@ def test_upsert_insert_delete(spark, db):
 
 def test_relate_and_events(spark, db):
     seen = []
-    db.define_table(TableDef("knows", id_col="id", events=[lambda a, df: seen.append(a)]))
+    db.define_table(TableDef("knows", id_col="id", events=[lambda a, df, before: seen.append(a)]))
     edges = spark.createDataFrame([Row(**{"in": "person:1", "out": "person:2"})])
     db.relate("knows", edges)
     got = db.table("knows").collect()[0]

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from surrealdb_spark.catalog import Catalog
 from surrealdb_spark.functions import geometry as GM
 
 
@@ -103,9 +104,8 @@ def test_surql_geometry_operators(spark):
         [Row(id=1, lon=0.5, lat=0.5), Row(id=2, lon=9.0, lat=9.0)]
     ).withColumn("loc", GM.point(F.col("lon"), F.col("lat")))
 
-    class Cat:
-        def table(self, name):
-            return df
+    cat = Catalog(spark)
+    cat.register("t", df)
 
     out = compile_select(
         spark,
@@ -113,7 +113,7 @@ def test_surql_geometry_operators(spark):
             "SELECT id FROM t WHERE loc INSIDE"
             " { type: 'Polygon', coordinates: [[[0,0],[4,0],[4,4],[0,4],[0,0]]] }"
         ),
-        catalog=Cat(),
+        catalog=cat,
     )
     assert [r["id"] for r in out.collect()] == [1]
 
@@ -123,7 +123,7 @@ def test_surql_geometry_operators(spark):
             "SELECT id FROM t WHERE (9.0, 9.0) INTERSECTS"
             " { type: 'Polygon', coordinates: [[[8,8],[10,8],[10,10],[8,10],[8,8]]] }"
         ),
-        catalog=Cat(),
+        catalog=cat,
     )
     assert [r["id"] for r in out2.collect()] == [1, 2]
 
@@ -133,7 +133,7 @@ def test_surql_geometry_operators(spark):
             "SELECT id FROM t WHERE loc OUTSIDE"
             " { type: 'Polygon', coordinates: [[[0,0],[4,0],[4,4],[0,4],[0,0]]] }"
         ),
-        catalog=Cat(),
+        catalog=cat,
     )
     assert [r["id"] for r in out3.collect()] == [2]
 

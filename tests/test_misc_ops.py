@@ -1,4 +1,4 @@
-"""Mock / EXPLAIN / TIMEOUT / INFO / permissions / aggregate views."""
+"""Mock / EXPLAIN / TIMEOUT / INFO / permissions."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from surrealdb_spark.catalog import Catalog
-from surrealdb_spark.dml import Database, TableDef, ViewDef, define_view
 from surrealdb_spark.operators.misc import (
     explain,
     info_for_db,
@@ -59,35 +58,6 @@ def test_permissions_filter(spark):
     assert [r.id for r in got] == [1]
     assert with_permissions(df, None).count() == 2  # Permission::Full
     assert with_permissions(df, F.lit(False)).count() == 0  # Permission::None
-
-
-def test_aggregate_view_maintenance(spark, tmp_path):
-    db = Database(spark, str(tmp_path))
-    db.define_table(TableDef("sale", id_col="id"))
-    db.create(
-        "sale",
-        spark.createDataFrame(
-            [Row(id="sale:1", grp="a", amt=10), Row(id="sale:2", grp="b", amt=5)],
-            schema="id string, grp string, amt bigint",
-        ),
-    )
-    define_view(
-        db,
-        ViewDef(
-            "sale_totals",
-            "sale",
-            lambda df: df.groupBy("grp").agg(F.sum("amt").alias("total")),
-        ),
-    )
-    totals = {r.grp: r.total for r in db.table("sale_totals").collect()}
-    assert totals == {"a": 10, "b": 5}
-    # a mutation on the source re-materializes the view
-    db.create(
-        "sale",
-        spark.createDataFrame([Row(id="sale:3", grp="a", amt=7)], "id string, grp string, amt bigint"),
-    )
-    totals = {r.grp: r.total for r in db.table("sale_totals").collect()}
-    assert totals == {"a": 17, "b": 5}
 
 
 def test_fulltext_index_reuse(spark):

@@ -1,5 +1,4 @@
-"""Salted joins, skew profiling, LIVE DIFF, and the schemaless spine/overflow
-write path."""
+"""Salted joins, skew profiling and LIVE DIFF."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ import json
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from surrealdb_spark import schemaless as SL
 from surrealdb_spark.dml import Database, TableDef
 from surrealdb_spark.operators.skew import salted_join, skew_profile
 from surrealdb_spark.streaming.changefeed import live_select_diff, start_live
@@ -49,40 +47,3 @@ def test_live_diff_patches(spark, tmp_path):
     by_action = {r.action: json.loads(r.diff) for r in rows}
     assert {"op": "replace", "path": "/v", "value": 2} in by_action["UPDATE"]
     assert any(o["op"] == "add" and o["path"] == "/id" for o in by_action["CREATE"])
-
-
-DOCS = [
-    {"id": 1, "name": "a", "score": 1.5, "tag": "x"},
-    {"id": 2, "name": "b", "score": 2, "note": None},
-    {"id": 3, "name": "c", "extra": {"deep": True}},
-]
-
-
-def test_schemaless_spine_and_overflow(spark):
-    spine = SL.observe_schema(DOCS, promote_share=0.6)
-    assert spine == {"id": "bigint", "name": "string", "score": "double"}
-    df = SL.to_spine_df(spark, DOCS, spine)
-    got = {r.id: r for r in df.collect()}
-    assert got[1].score == 1.5 and got[2].score == 2.0
-    assert json.loads(got[3]._overflow) == {"extra": {"deep": True}}
-    # dynamic field reads through spine OR overflow
-    tags = {
-        r.id: r.tag
-        for r in df.select("id", SL.dynamic_field(df, "tag").alias("tag")).collect()
-    }
-    assert tags == {1: "x", 2: None, 3: None}
-    # None (absent) vs Null (explicit) tri-state survives
-    states = {
-        r.id: r.s
-        for r in df.select("id", SL.dynamic_field_state(df, "note").alias("s")).collect()
-    }
-    assert states == {1: "none", 2: "null", 3: "none"}
-
-
-def test_schema_evolution_promote(spark):
-    spine = SL.observe_schema(DOCS, promote_share=0.6)
-    df = SL.to_spine_df(spark, DOCS, spine)
-    out = SL.merge_overflow_into_spine(df, "tag", "string")
-    got = {r.id: r for r in out.collect()}
-    assert got[1].tag == "x" and got[2].tag is None
-    assert got[1]._overflow is None  # tag was its only overflow key

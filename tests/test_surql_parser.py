@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from surrealdb_spark.catalog import Catalog
 from surrealdb_spark.sql import parse_expr, parse_select, surql
 from surrealdb_spark.sql.compiler import compile_expr
 
@@ -190,14 +191,13 @@ def test_decimal_promotion(spark):
         "a int, f double, d decimal(38,10)",
     )
 
-    class Cat:
-        def table(self, name):
-            return df
+    cat = Catalog(spark)
+    cat.register("t", df)
 
     out = compile_select(
         spark,
         parse_select("SELECT a + d AS s, f * d AS p, d / d AS q FROM t"),
-        catalog=Cat(),
+        catalog=cat,
     )
     kinds = {f.name: f.dataType.simpleString() for f in out.schema.fields}
     assert kinds["s"].startswith("decimal")
@@ -231,17 +231,16 @@ def test_order_collate(spark):
 
     df = spark.createDataFrame([("b",), ("A",), ("a",), ("B",)], "s string")
 
-    class Cat:
-        def table(self, name):
-            return df
+    cat = Catalog(spark)
+    cat.register("t", df)
 
     sel = parse_select("SELECT s FROM t ORDER BY s COLLATE")
     assert sel.order[0].collate
-    out = compile_select(spark, sel, catalog=Cat())
+    out = compile_select(spark, sel, catalog=cat)
     assert [r["s"] for r in out.collect()] == ["a", "A", "b", "B"]
     # without COLLATE: binary order, uppercase block first
     plain = compile_select(
-        spark, parse_select("SELECT s FROM t ORDER BY s"), catalog=Cat())
+        spark, parse_select("SELECT s FROM t ORDER BY s"), catalog=cat)
     assert [r["s"] for r in plain.collect()] == ["A", "B", "a", "b"]
 
 
